@@ -7,8 +7,9 @@ order, and past rounds show its correctness pass covers only the first ~50
 entries).  The order is derived from coverage data, not a hand list: entries
 the driver has never checked, or checked longest ago, come first, with one
 representative per operator family pulled forward inside each staleness
-tier — see coverage.py.  The policy gate (no entry >2 rounds unchecked)
-lives in tests/test_registry.py.
+tier — see coverage.py.  The policy gate (no entry unchecked for more than
+the adaptive ceil(N / W) rounds, N entries against a W-slot driver window)
+lives in tests/test_registry.py and runs on a simulated driver history.
 """
 
 from .ann_index import QUERIES as ANN_IDX_QUERIES

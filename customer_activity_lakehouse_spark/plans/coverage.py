@@ -29,8 +29,12 @@ instead:
    covers every family.
 
 The policy gates live in tests/test_registry.py: no entry may go more than
-two rounds without a driver check, and a rewritten entry must lead the
-catalog.
+the adaptive bound of ceil(N / W) rounds without a driver check (N catalog
+entries, W = ``DRIVER_WINDOW`` slots; never below two), and a rewritten
+entry must lead the catalog.  The staleness and family gates judge
+``catalog_order`` in every round of a simulated driver history (each round
+greens the first W entries of the order), not the committed
+``CORRECTNESS_r*.json`` rounds.
 
 Snapshot ritual: run ``python -m customer_activity_lakehouse_spark.plans.coverage``
 IMMEDIATELY after a round's CORRECTNESS file lands and BEFORE editing any

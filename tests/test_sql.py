@@ -411,33 +411,40 @@ def test_maintain_index_sql_route(spark, tmp_path):
     vacuums old versions WITHOUT breaking the serve — the fixed 3-term
     query still prunes and answers exactly after. A non-index path
     fails loudly instead of compacting whatever it names."""
+    import inspect
     import re as _re
 
     from customer_activity_lakehouse_spark.plans.text_index import (
         query_text_index,
     )
+    from customer_activity_lakehouse_spark.sources.snapshots import maintain_snapshot
 
+    # MAINTAIN compacts a subtable only past this many small files
+    max_small = inspect.signature(maintain_snapshot).parameters["max_small_files"].default
     corpus = str(tmp_path / "corpus")
     idx = str(tmp_path / "idx")
     docs = [(i, f"spark table query row{i} filler words here") for i in range(40)]
+    # one file per commit: the build writes one doclen file per corpus-scan
+    # partition, so a single-file corpus makes the debris count independent
+    # of the core count (1 build file + 1 per fold)
     commit_append(
         spark,
         corpus,
-        spark.createDataFrame(docs, "doc_id long, text string"),
+        spark.createDataFrame(docs, "doc_id long, text string").coalesce(1),
         stats_cols=["doc_id"],
     )
     run_table_sql(
         spark, f"CREATE TEXT INDEX snapshot.`{idx}` ON snapshot.`{corpus}`"
     )
-    # three maintenance folds -> per-fold doclen/postings debris
-    for lo in (40, 80, 120):
+    # max_small maintenance folds -> per-fold doclen/postings debris
+    for lo in range(40, 40 * (max_small + 1), 40):
         commit_append(
             spark,
             corpus,
             spark.createDataFrame(
                 [(i, f"spark query extra batch{lo} doc{i}") for i in range(lo, lo + 40)],
                 "doc_id long, text string",
-            ),
+            ).coalesce(1),
             stats_cols=["doc_id"],
         )
         run_table_sql(
@@ -447,7 +454,7 @@ def test_maintain_index_sql_route(spark, tmp_path):
     dl_files_before = len(
         {f for f in read_snapshot(spark, f"{idx}/doclen").inputFiles() if "-dv-" not in f}
     )
-    assert dl_files_before >= 3  # the debris MAINTAIN exists to shed
+    assert dl_files_before > max_small  # the debris MAINTAIN exists to shed
     rows = run_table_sql(
         spark,
         f"MAINTAIN TEXT INDEX snapshot.`{idx}` TARGET 1 MB KEEP 1 VERSIONS",
