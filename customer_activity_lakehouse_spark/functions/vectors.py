@@ -2,9 +2,10 @@
 
 Built on higher-order functions (zip_with / aggregate) so the arithmetic runs
 JVM-side per row — no Python, no UDF serialization. The Arrow-batched
-pandas_udf variants (order-exact NumPy cumsum reductions) live in
-plans/llm_ops.py (q_ann_topk_pandas, _cos_pairs_udf) for the paths where
-vectorized batches beat interpreted HOF lambdas.
+pandas_udf variants use the order-exact NumPy folds of
+plans/vector_kernels.py (the one module that keeps their numeric contract
+with these expressions) for the paths where vectorized batches beat
+interpreted HOF lambdas.
 
 All math in double precision regardless of the stored float32 — matches what
 DuckDB's list functions do, keeping oracle hashes stable.

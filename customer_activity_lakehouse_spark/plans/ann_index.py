@@ -64,9 +64,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from .ml_ops import (
-    IVF_PROBES,
-    KM_ITERS,
     KM_SCALE,
     PQ_M,
     PQ_SUB,
@@ -74,17 +73,17 @@ from .ml_ops import (
     _codebook_rows,
     _ivf_cells,
     _ivfpq_sql_chain,
-    _km_assign,
-    _km_quantized,
-    _km_update,
     _km_sql_parts,
-    _np_chunk_rows,
-    _pq_fit_frame,
+    _km_train,
+    _md5_hex_value,
+    _pq_fit,
+    _quantize,
     _serve_probes,
     _sql_serve_probes,
     _train_divisor,
 )
 from .registry import Query, table
+from .vector_kernels import adc_cos, argmin_sq, cents_arrays, int_norm, rows_matrix
 
 ANN_TOPK = 10
 # Refine-stage candidate pool (r14, VERDICT r13 missing #2): the ADC
@@ -96,33 +95,14 @@ ANN_TOPK = 10
 REFINE_POOL = 8 * ANN_TOPK
 
 
-def _seed_centroids_scaled(embq: DataFrame, k: int) -> DataFrame:
-    """Deterministic hash-bucket seeding for a CORPUS-SIZED cell count:
-    bucket = 8-hex-digit md5 value of vec_id mod k (the legacy one-digit
-    `_km_seed_centroids` idiom caps K at 16 buckets), seed = the bucket's
-    minimum vec_id. Same shape as the fixed-K seeding — one partial-agg
-    pass to ≤k rows + a broadcast join back; the DuckDB twin is
-    `ml_ops._SQL_HEX8 % k` (verified bit-identical)."""
-    hex8 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8)
-    bucket = F.conv(hex8, 16, 10).cast("long") % k
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    return embq.join(F.broadcast(seeds), "vec_id").select(
-        "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
-    )
-
-
 _CENTS_SCHEMA = "cluster int, c array<double>"
 
 
 def _local_cents(spark: SparkSession, rows) -> DataFrame:
     """Rebuild a centroid frame from collected (cluster, c) rows as a
     LocalRelation — doubles round-trip exactly through the driver, and
-    downstream consumers (commits, the encode kernel's collect) see a
-    lineage-free K-row frame instead of re-executing a Lloyd pass."""
+    the index commit sees a lineage-free K-row frame instead of
+    re-executing a Lloyd pass."""
     return spark.createDataFrame(
         [(int(cl), list(c)) for cl, c in rows], _CENTS_SCHEMA
     )
@@ -144,17 +124,14 @@ def _local_books(spark: SparkSession, book: dict) -> DataFrame:
     )
 
 
-def _km_fit_scaled(embq: DataFrame, k: int, divisor: int = 1) -> DataFrame:
-    """Lloyd's with a corpus-sized cell count — `ml_ops._km_fit_frame`
-    with the scaled seeding; assign/update are K-agnostic and shared.
-    Returns the TRAINED CENTROIDS as a lineage-free local K-row frame
-    (r14): each update's ≤k rows are collected once per iteration —
-    the same driver-bounded job the pre-r14 broadcast exchange ran, minus
-    the re-execution the old lazy chain paid when the caller pinned or
-    re-read the final frame. The final full-corpus assignment is NOT run
-    here — the build folds it into the single encode pass
-    (`_encode_cells`), so the corpus is scanned once per training
-    iteration plus once to encode, and nothing twice.
+def _km_fit_scaled(
+    embq: DataFrame, k: int, divisor: int = 1
+) -> list[tuple[int, list[float]]]:
+    """Lloyd's with a corpus-sized cell count: `ml_ops._km_train` with k
+    cells and 8-hex-digit seeding. Returns the trained centroid rows; the
+    final full-corpus assignment is NOT run here — the build folds it
+    into the single encode pass (`_encode_cells`), so the corpus is
+    scanned once per training iteration plus once to encode.
 
     ``divisor`` > 1 trains on the deterministic md5 sample (8-hex-digit
     value % divisor == 0 — `ml_ops._train_divisor`, the FAISS
@@ -162,96 +139,44 @@ def _km_fit_scaled(embq: DataFrame, k: int, divisor: int = 1) -> DataFrame:
     scan ~KM_TRAIN_PER_CELL·k rows instead of the corpus, turning
     training from O(N^1.5·dim) to O(N·dim). divisor=1 (every fixture
     scale) is byte-identical to full-corpus training."""
-    spark = embq.sparkSession
-    train = embq
-    if divisor > 1:
-        hex8 = F.substring(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8
-        )
-        train = embq.filter(F.conv(hex8, 16, 10).cast("long") % divisor == 0)
-    cents = _local_cents(spark, _centroid_rows(_seed_centroids_scaled(train, k)))
-    for _ in range(KM_ITERS - 1):
-        assigned = _km_assign(train, cents)
-        cents = _local_cents(spark, _centroid_rows(_km_update(assigned)))
-    return cents
+    train = embq if divisor <= 1 else embq.filter(_md5_hex_value(8) % divisor == 0)
+    return _km_train(train, k, hex_digits=8)
 
 
-def _quantize(emb: DataFrame) -> DataFrame:
-    """(vec_id, q): the ml_ops integer grid over an arbitrary
-    (vec_id, embedding) frame — same exactness contract as
-    `_km_quantized`, which is fixture-bound."""
-    q = F.transform("embedding", lambda x: F.floor(x.cast("double") * KM_SCALE))
-    return emb.select("vec_id", q.alias("q"))
-
-
-def _encode_cells(
-    embq: DataFrame, cents: DataFrame, books: DataFrame
-) -> DataFrame:
+def _encode_cells(embq: DataFrame, crows, book) -> DataFrame:
     """(vec_id, cell, code[PQ_M]): the coarse-cell argmin AND the per-
     subspace PQ codes computed in ONE zero-shuffle pass through an
-    Arrow-vectorized NumPy kernel (guide §4.2, §2.4). Replaces the
-    pre-r14 three-stage chain — per-(vec, m) explode → argmin →
-    groupBy(vec_id) collect_list → join back to the cell assignment —
-    which shuffled the 8×-exploded corpus twice (measured 2.3 s of the
-    sf0.1 build) for per-row arithmetic the scan task can do in place.
+    Arrow-vectorized NumPy kernel (guide §4.2, §2.4) against the collected
+    centroid rows ``crows`` and codebook ``book``. Replaces the pre-r14
+    three-stage chain — per-(vec, m) explode → argmin → groupBy(vec_id)
+    collect_list → join back to the cell assignment — which shuffled the
+    8×-exploded corpus twice (measured 2.3 s of the sf0.1 build) for
+    per-row arithmetic the scan task can do in place.
 
-    Numeric parity: the kernel is the `_km_assign` / `_pq_assign` cumsum
-    + first-argmin contract per stage (pinned in tests/test_np_kernels.py);
-    code order is ascending m, exactly the retired array_sort(collect_list)
-    layout. The centroid/codebook collects are nlist + 128 rows —
-    driver-bounded (the `_ordered_cells` class)."""
-    crows = _centroid_rows(cents)
-    book = _codebook_rows(books)
+    Numeric parity: every stage is `vector_kernels.argmin_sq` (pinned in
+    tests/test_np_kernels.py); code order is ascending m, exactly the
+    retired array_sort(collect_list) layout."""
     if not crows or not book:
         # fail at the driver with a diagnosable message instead of an
-        # opaque executor-side broadcasting ValueError inside the kernel
+        # executor-side error inside the kernel
         raise ValueError(
             f"_encode_cells: empty centroid ({len(crows)}) or codebook "
             f"({len(book)}) frame — the index training input has no rows"
         )
-    sc = embq.sparkSession.sparkContext
-    bc = sc.broadcast(
-        (
-            np.array([c for _, c in crows], dtype=np.float64),
-            np.array([cl for cl, _ in crows], dtype=np.int64),
-            {
-                m: (
-                    np.array([c for _, c in rows], dtype=np.float64),
-                    np.array([cl for cl, _ in rows], dtype=np.int64),
-                )
-                for m, rows in book.items()
-            },
-        )
+    bc = embq.sparkSession.sparkContext.broadcast(
+        (cents_arrays(crows), [cents_arrays(book[m]) for m in range(PQ_M)])
     )
-
-    n_cells, dim = len(crows), len(crows[0][1]) if crows else 1
-    chunk = _np_chunk_rows(n_cells, dim)
 
     @F.pandas_udf("struct<cell:int,code:array<int>>")
     def enc(q: pd.Series) -> pd.DataFrame:
-        cents_np, clusters_np, books = bc.value
-        if len(q) == 0:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"), "code": []})
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q.values])
-        n = qm.shape[0]
-        cell = np.empty(n, dtype=np.int64)
-        for lo in range(0, n, chunk):  # bound the (rows×cells×dim) temp
-            part = qm[lo : lo + chunk]
-            d = part[:, None, :] - cents_np[None, :, :]
-            d *= d
-            cell[lo : lo + len(part)] = clusters_np[
-                np.argmin(np.cumsum(d, axis=2)[:, :, -1], axis=1)
-            ]
-        codes = np.empty((n, PQ_M), dtype=np.int32)
-        for m in range(PQ_M):
-            cents_m, cl_m = books[m]
+        (cents, clusters), books = bc.value
+        qm = rows_matrix(q.values)
+        cell = clusters[argmin_sq(qm, cents)[0]]
+        codes = np.empty((len(qm), PQ_M), dtype=np.int32)
+        for m, (cents_m, cl_m) in enumerate(books):
             sub = qm[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            dm = sub[:, None, :] - cents_m[None, :, :]
-            dm *= dm
-            codes[:, m] = cl_m[np.argmin(np.cumsum(dm, axis=2)[:, :, -1], axis=1)]
-        return pd.DataFrame(
-            {"cell": cell.astype("int32"), "code": list(codes)}
-        )
+            codes[:, m] = cl_m[argmin_sq(sub, cents_m)[0]]
+        return pd.DataFrame({"cell": cell.astype("int32"), "code": list(codes)})
 
     return embq.select("vec_id", enc("q").alias("__e")).select(
         "vec_id",
@@ -286,7 +211,7 @@ def build_ann_index(
     n = emb.count()  # one metadata-cheap single-column scan
     n_cells = cells if cells is not None else _ivf_cells(n)
     embq = _quantize(emb)
-    # Train ONCE into lineage-free LOCAL frames (r14; replaces the r13
+    # Train ONCE into collected rows (r14; replaces the r13
     # persist-and-pin): the trained state is nlist + PQ_M*PQ_K rows —
     # collecting it once per training iteration is the same driver-bounded
     # job the broadcast exchanges ran, and every downstream consumer (the
@@ -295,29 +220,17 @@ def build_ann_index(
     # collects, or shuffles. r15 (guide §2.6): the coarse-quantizer and
     # PQ-codebook chains are independent short series of driver-bounded
     # collect jobs — run them from two driver threads so one chain's
-    # collect latency back-fills the other's (the build was ~10 strictly
-    # sequential jobs; the two training chains are the longest stretch).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cents = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _km_fit_scaled(embq, n_cells, _train_divisor(n, n_cells))
-            )
-        )
-        f_books = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _local_books(spark, _codebook_rows(_pq_fit_frame(embq)))
-            )
-        )
-        cents, books = f_cents.result(), f_books.result()
+    # collect latency back-fills the other's.
+    crows, book = run_concurrently(
+        spark,
+        lambda: _km_fit_scaled(embq, n_cells, _train_divisor(n, n_cells)),
+        lambda: _pq_fit(embq),
+    )
     # assign cells AND encode PQ codes in ONE zero-shuffle corpus pass
     # (r14, guide §2.4 / §4.2): bit-identical to the training path's
     # final assignment (same argmin against the same doubles); the
     # pre-r14 explode→regroup→join chain's two corpus shuffles are gone
-    codes = _encode_cells(embq, cents, books)
+    codes = _encode_cells(embq, crows, book)
     extra = (
         None
         if consumed_version is None
@@ -333,40 +246,28 @@ def build_ann_index(
     # shape: a cell is ~N/nlist ≈ sqrt(N) 4-byte codes, well under one
     # parquet file.
     n_parts = max(1, min(int(n_cells), spark.sparkContext.defaultParallelism))
-    # the three commits target three independent tables: overlap them
-    # (guide §2.6) — the two K-row metadata commits ride along while the
-    # corpus-scale codes encode+write runs
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        jobs = [
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(spark, f"{index_dir}/ivf_centroids", cents)
-                )
-            ),
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(
-                        spark, f"{index_dir}/pq_codebooks", books.orderBy("m", "cluster")
-                    )
-                )
-            ),
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(
-                        spark,
-                        f"{index_dir}/codes",
-                        codes.select("vec_id", "cell", "code").repartition(
-                            n_parts, "cell"
-                        ),
-                        stats_cols=["vec_id"],
-                        partition_by=["cell"],
-                        extra=extra,
-                    )
-                )
-            ),
-        ]
-        for j in jobs:
-            j.result()
+    # the two K-row metadata tables commit concurrently; ``codes`` (what
+    # serve and maintain look for) commits only after both succeeded, so
+    # a failed build never leaves codes visible without their codebooks
+    run_concurrently(
+        spark,
+        lambda: commit_append(
+            spark, f"{index_dir}/ivf_centroids", _local_cents(spark, crows)
+        ),
+        lambda: commit_append(
+            spark,
+            f"{index_dir}/pq_codebooks",
+            _local_books(spark, book).orderBy("m", "cluster"),
+        ),
+    )
+    commit_append(
+        spark,
+        f"{index_dir}/codes",
+        codes.select("vec_id", "cell", "code").repartition(n_parts, "cell"),
+        stats_cols=["vec_id"],
+        partition_by=["cell"],
+        extra=extra,
+    )
 
 
 def maintain_ann_index(
@@ -422,12 +323,13 @@ def maintain_ann_index(
         # stamping needs a commit, and an empty append has no files;
         # the next maintenance re-walks the same range (cheap).
         return None
-    embq = _quantize(new)
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    books = read_snapshot(spark, f"{index_dir}/pq_codebooks")
     # assign + encode in one zero-shuffle pass against the FROZEN trained
     # state (r14 — same kernel as the build path)
-    codes = _encode_cells(embq, cents, books)
+    codes = _encode_cells(
+        _quantize(new),
+        _centroid_rows(read_snapshot(spark, f"{index_dir}/ivf_centroids")),
+        _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks")),
+    )
     # keyed MERGE, not append (r10): double-application of the same feed
     # (stale stamp read / crash replay) CONVERGES — the second pass
     # matches every vec_id and rewrites identical rows, so the serve can
@@ -571,132 +473,46 @@ def _ordered_cells(
     return [int(r["cluster"]) for r in rows]
 
 
-def _adc_cos():
-    """The in-row ADC cosine expression over columns ``qq`` (quantized
-    query), ``code`` (PQ code array) and ``cents`` (broadcast per-m
-    codebooks) — independent of HOW qq arrived on the row, so the
-    single-query (broadcast scalar) and batch (joined per-row) serve
-    paths share the exact fold order and stay bit-identical."""
-
-    def _subvec(arr, m):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_SUB)),
-            lambda i: F.element_at(arr, (m * PQ_SUB + i).cast("int")),
-        )
-
-    def _fold(arr):
-        return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
-
-    def _per_m(m):
-        qv = _subvec(F.col("qq"), m)
-        my_cents = F.element_at(F.col("cents"), (m + 1).cast("int"))
-        cm = F.element_at(F.col("code"), (m + 1).cast("int"))
-        c = F.element_at(
-            F.filter(my_cents, lambda s: s["cluster"] == cm), 1
-        )["c"]
-        return F.struct(
-            _fold(F.zip_with(c, qv, lambda a, b: a * b.cast("double"))).alias(
-                "dot"
-            ),
-            _fold(F.transform(c, lambda x: x * x)).alias("sq"),
-        )
-
-    per_m = F.transform(F.sequence(F.lit(0), F.lit(PQ_M - 1)), _per_m)
-    dots = _fold(F.transform(per_m, lambda s: s["dot"]))
-    sqs = _fold(F.transform(per_m, lambda s: s["sq"]))
-    qnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("qq"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double")
-    )
-    return dots / (F.sqrt(sqs) * qnorm)
-
-
-def _books_arr(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The PQ codebooks collapsed to ONE broadcastable row: per-m sorted
-    (cluster, c) arrays, ordered by m."""
-    from ..sources.snapshots import read_snapshot
-
-    books = read_snapshot(spark, f"{index_dir}/pq_codebooks")
-    return (
-        books.groupBy("m")
-        .agg(F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cm"))
-        .agg(F.array_sort(F.collect_list(F.struct("m", "cm"))).alias("byms"))
-        .select(F.transform("byms", lambda s: s["cm"]).alias("cents"))
-    )
-
-
 def _adc_code_cos_udf(spark: SparkSession, book, qq_fixed: np.ndarray | None):
     """Arrow kernel for the SERVE path: ADC cosine of stored PQ ``code``
-    rows against a query — codeword lookup by cluster id, then the exact
-    `_adc_cos` fold order (per-m dot/sq partials from the reconstructed
-    codeword, folded ascending-m; qnorm an exact integer fold). With
+    rows against a query — codeword lookup by cluster id, then
+    `vector_kernels.adc_cos` (per-m dot/sq partials from the reconstructed
+    codeword, folded ascending-m; qnorm an exact integer sum). With
     ``qq_fixed`` the query is a kernel constant (single-query serve: no
     crossJoin machinery at all); without it the kernel reads a per-row
     ``qq`` column (the batch serve, where each candidate row carries its
-    own query). Pinned equal to the `_adc_cos` expression twin in
+    own query). Pinned equal to the JVM expression twin in
     tests/test_np_kernels.py."""
-    luts = {}
-    for m, rows in book.items():
-        hi = max(cl for cl, _ in rows)
-        lut = np.zeros((hi + 1, len(rows[0][1])), dtype=np.float64)
+    luts = []
+    for m in range(PQ_M):
+        rows = book[m]
+        lut = np.zeros((max(cl for cl, _ in rows) + 1, len(rows[0][1])), dtype=np.float64)
         for cl, c in rows:
             lut[cl] = c
-        luts[m] = lut
+        luts.append(lut)
     bc = spark.sparkContext.broadcast(luts)
 
-    def _norms(qm: np.ndarray) -> np.ndarray:
-        # exact integer fold: int64 element squares/sums never round
-        return np.sqrt((qm.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
+    def words(code: pd.Series) -> list[np.ndarray]:
+        cm = rows_matrix(code.values, np.int64)
+        return [lut[cm[:, m]] for m, lut in enumerate(bc.value)]
 
     if qq_fixed is not None:
-        q_acc = 0
-        for x in qq_fixed.tolist():  # sequential long fold, as the JVM expr
-            q_acc += x * x
-        qnorm = float(np.sqrt(float(q_acc)))
-        qv = qq_fixed.astype(np.float64)
+        qv, qnorm = qq_fixed.astype(np.float64), int_norm(qq_fixed)
 
         @F.pandas_udf("double")
         def adc(code: pd.Series) -> pd.Series:
-            tabs = bc.value
             if len(code) == 0:
                 return pd.Series([], dtype="float64")
-            cm = np.stack([np.asarray(v, dtype=np.int64) for v in code.values])
-            n = cm.shape[0]
-            dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-            sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-            for m in range(PQ_M):
-                c = tabs[m][cm[:, m]]
-                qsub = qv[m * PQ_SUB : (m + 1) * PQ_SUB]
-                dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-                sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-            dots = np.cumsum(dot_parts, axis=1)[:, -1]
-            sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-            return pd.Series(dots / (np.sqrt(sqs) * qnorm))
+            return pd.Series(adc_cos(words(code), qv, qnorm))
 
         return adc
 
     @F.pandas_udf("double")
     def adc_batch(code: pd.Series, qq: pd.Series) -> pd.Series:
-        tabs = bc.value
         if len(code) == 0:
             return pd.Series([], dtype="float64")
-        cm = np.stack([np.asarray(v, dtype=np.int64) for v in code.values])
-        qm = np.stack([np.asarray(v, dtype=np.int64) for v in qq.values])
-        qmf = qm.astype(np.float64)
-        n = cm.shape[0]
-        dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-        sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-        for m in range(PQ_M):
-            c = tabs[m][cm[:, m]]
-            qsub = qmf[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-            sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-        dots = np.cumsum(dot_parts, axis=1)[:, -1]
-        sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-        return pd.Series(dots / (np.sqrt(sqs) * _norms(qm)))
+        qm = rows_matrix(qq.values, np.int64)
+        return pd.Series(adc_cos(words(code), qm.astype(np.float64), int_norm(qm)))
 
     return adc_batch
 
@@ -711,7 +527,7 @@ def _adc_topk(
     """ADC-score a candidate codes frame against the persisted codebooks
     and take top-k — the shared tail of the filtered and unfiltered serve
     paths. r14: the scoring runs in the Arrow kernel above (guide §4.2)
-    instead of the interpreted `_adc_cos` HOF expression — same fixed
+    instead of an interpreted HOF expression — same fixed
     m-order folds, so the doubles stay bit-identical to the retraining
     oracle; the two broadcast cross joins the expression needed are gone
     (the 128-row codebook and the 1-row query are kernel constants)."""
@@ -752,7 +568,7 @@ def query_ann_index_batch(
        batch size);
     3. candidates = codes ⋈ broadcast probe pairs on cell — each code
        row is scored only for the queries that probed its cell, with the
-       query vector arriving ON the row (same `_adc_cos` folds as the
+       query vector arriving ON the row (same `adc_cos` folds as the
        single-query path, bit-identical);
     4. top-k per query: row_number over partitionBy(qid) — bounded
        partitions (a query's candidates ≤ probed cells' rows),
@@ -1044,7 +860,7 @@ def q_ann_index_query(spark: SparkSession, sf: str) -> DataFrame:
     sqrt(nlist)-probe prefix deterministically and must land on the
     same top-10 the persisted index serves."""
     idx = _index_dir(spark, sf)
-    q0 = _km_quantized(spark, sf).filter(F.col("vec_id") == 0)
+    q0 = _quantize(table(spark, sf, "embeddings")).filter(F.col("vec_id") == 0)
     return query_ann_index(spark, idx, q0, k=ANN_TOPK, exclude_id=0)
 
 
@@ -1178,7 +994,7 @@ def q_ann_index_query_where(spark: SparkSession, sf: str) -> DataFrame:
     than k rows — the silent under-return this serve path exists to
     avoid."""
     idx = _index_dir(spark, sf)
-    q0 = _km_quantized(spark, sf).filter(F.col("vec_id") == 0)
+    q0 = _quantize(table(spark, sf, "embeddings")).filter(F.col("vec_id") == 0)
     allowed = (
         table(spark, sf, "embeddings")
         .filter(

@@ -51,6 +51,7 @@ from ..functions.text import (
 )
 from ..operators.joins import dim_join
 from .registry import Query, materialize, table
+from .vector_kernels import rows_matrix, seq_sum
 
 # Default per-bucket row cap for the LSH band self-joins. A band bucket of n
 # rows produces O(n²) candidate pairs; a pathological cluster (millions of
@@ -2254,8 +2255,8 @@ def _bucket_verify_fn():
     """Bucket-local pairwise cosine for :func:`embedding_lsh_pairs` —
     applied per (band_idx, band_val) group. Generates the C(n,2) pairs of
     each bucket INSIDE numpy (np.triu_indices) and computes cosines with
-    per-row LEFT-TO-RIGHT reductions (np.cumsum last column) — the exact
-    float-op order of the JVM ``aggregate`` fold and the DuckDB oracle.
+    per-row LEFT-TO-RIGHT reductions (the `vector_kernels` contract) — the
+    exact float-op order of the JVM ``aggregate`` fold and the DuckDB oracle.
     Emits RAW doubles; rounding/threshold stay in the Spark plan so the
     half-up F.round semantics (np.round is half-even) are identical to
     every other catalog query. Pair chunks bound peak memory to
@@ -2268,18 +2269,18 @@ def _bucket_verify_fn():
                 {"vec_a": "int64", "vec_b": "int64", "cos_raw": "float64"}
             )
         ids = pdf["vec_id"].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-        # Per-VECTOR norms once (cumsum last col = sequential left-to-right
-        # fold, the JVM/DuckDB op order — np.sum would pairwise-reassociate),
-        # then indexed per pair: O(n·d) instead of O(pairs·d) twice.
-        norms = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
+        m = rows_matrix(pdf["embedding"])
+        # Per-VECTOR norms once (sequential left-to-right fold, the
+        # JVM/DuckDB op order — np.sum would pairwise-reassociate), then
+        # indexed per pair: O(n·d) instead of O(pairs·d) twice.
+        norms = np.sqrt(seq_sum(m * m))
         iu, ju = np.triu_indices(n, k=1)
         outs = []
         for s in range(0, len(iu), _VERIFY_PAIR_CHUNK):
             ii, jj = iu[s : s + _VERIFY_PAIR_CHUNK], ju[s : s + _VERIFY_PAIR_CHUNK]
             ma, mb = m[ii], m[jj]
             # sequential per-column accumulate — identical fold order to the
-            # zip_with/aggregate expression, without cumsum's (pairs×d) temp
+            # zip_with/aggregate expression, without a (pairs×d) temp
             dots = np.zeros(len(ii), dtype=np.float64)
             for k in range(m.shape[1]):
                 dots += ma[:, k] * mb[:, k]
@@ -2604,26 +2605,21 @@ def q_ann_topk_pandas(spark: SparkSession, sf: str) -> DataFrame:
     input in any ANN API — so capturing it in the UDF closure broadcasts
     64 floats, not data.
 
-    Numeric parity: the reductions use ``np.cumsum(..., axis=1)`` and take
-    the last column — a per-row LEFT-TO-RIGHT sequential scan, the exact
-    float-op order of the JVM ``aggregate`` fold and the DuckDB twin. A
-    BLAS matmul/einsum would be faster but reassociates the additions,
-    making the rounded-to-4dp oracle hash kernel/platform-dependent."""
+    Numeric parity: the reductions are `vector_kernels.seq_sum` — a
+    per-row LEFT-TO-RIGHT sequential fold, the exact float-op order of the
+    JVM ``aggregate`` fold and the DuckDB twin. A BLAS matmul/einsum would
+    be faster but reassociates the additions, making the rounded-to-4dp
+    oracle hash kernel/platform-dependent."""
     emb = table(spark, sf, "embeddings")
     qvec = np.asarray(
         emb.filter(F.col("vec_id") == 0).select("embedding").head()[0], dtype=np.float64
     )
-    q_acc = 0.0
-    for x in qvec:  # sequential fold, matching _norm_expr exactly
-        q_acc += x * x
-    q_norm = float(np.sqrt(q_acc))
+    q_norm = float(np.sqrt(seq_sum(qvec * qvec)))  # matches _norm_expr exactly
 
     @F.pandas_udf("double")
     def cos_udf(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        dots = np.cumsum(m * qvec, axis=1)[:, -1]
-        norms = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
-        return pd.Series(dots / (norms * q_norm))
+        m = rows_matrix(vecs)
+        return pd.Series(seq_sum(m * qvec) / (np.sqrt(seq_sum(m * m)) * q_norm))
 
     return (
         emb.filter(F.col("vec_id") != 0)

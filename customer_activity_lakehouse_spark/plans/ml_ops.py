@@ -16,8 +16,9 @@ oracle-portability rules as plans/llm_ops.py:
   partial-aggregation order (same trick as the anomaly z-score's integer
   window sums, plans/timeseries.py);
 - per-row folds (distances) are double-precision sequential folds in both
-  engines (F.aggregate left-fold == DuckDB list_sum(list_transform)),
-  rounded to 4dp at the output boundary.
+  engines (F.aggregate left-fold == DuckDB list_sum(list_transform)) and
+  in the Arrow kernels, whose numeric contract lives in
+  plans/vector_kernels.py; rounded to 4dp at the output boundary.
 
 Scale design (100 TB):
 - k-means never shuffles vectors: per iteration one broadcast of K
@@ -43,8 +44,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import dim_join
+from ..session import run_concurrently
 from .core import MONEY, SQL_REV, revenue
 from .registry import Query, materialize, table
+from .vector_kernels import adc_cos, argmin_sq, cents_arrays, int_norm, rows_matrix, sq_dists
 
 
 def _ml_tokens(c):
@@ -75,78 +78,37 @@ KM_ITERS = 3  # unrolled Lloyd iterations (fixed → deterministic plan)
 _HEX = "0123456789abcdef"
 
 
-def _km_quantized(spark: SparkSession, sf: str) -> DataFrame:
-    """(vec_id, q array<long>): embeddings quantized to an integer grid.
+def _quantize(emb: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, q array<long>): the embeddings of any (vec_id,
+    embedding) frame quantized to an integer grid; ``keep`` carries extra
+    columns (the serve paths keep the raw embedding).
 
     floor(float→double widening * 1000) is exact and engine-independent;
     all downstream sums over q are integer-exact, so centroid means are
     bit-identical across engines no matter the aggregation order."""
-    emb = table(spark, sf, "embeddings")
     q = F.transform("embedding", lambda x: F.floor(x.cast("double") * KM_SCALE))
-    return emb.select("vec_id", q.alias("q"))
+    return emb.select("vec_id", *keep, q.alias("q"))
 
 
-def _km_seed_centroids(embq: DataFrame) -> DataFrame:
-    """Deterministic hash-bucket seeding: cluster k seeds from the minimum
-    vec_id of md5-bucket k. One partial-agg pass to ≤K rows + a broadcast
-    join back for the seed vectors — no global sort, no driver collect."""
-    hex1 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 1)
-    # conv(hex, 16, 10) == DuckDB's strpos('0123456789abcdef', hex) - 1 for
-    # one hex digit — the cross-engine digit-value idiom
-    bucket = F.conv(hex1, 16, 10).cast("int") % KM_K
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
+def _md5_hex_value(digits: int):
+    """The first ``digits`` hex digits of md5(vec_id) as a BIGINT. For one
+    digit conv(hex, 16, 10) == DuckDB's strpos('0123456789abcdef', hex) - 1
+    (the cross-engine digit-value idiom); `_SQL_HEX8` is the 8-digit twin."""
+    h = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, digits)
+    return F.conv(h, 16, 10).cast("long")
+
+
+def _hash_seeds(embq: DataFrame, k: int, hex_digits: int) -> DataFrame:
+    """(cluster, vec_id) deterministic hash-bucket seeds: bucket = the
+    ``hex_digits``-digit md5 value of vec_id mod k, seed = the bucket's
+    minimum vec_id. One digit (fixed K and the PQ codebooks) caps k at 16
+    buckets; eight (the corpus-sized index, SemDeDup) cover any k below
+    2^32. One partial-agg pass to ≤k rows — no global sort, no collect."""
+    return (
+        embq.select((_md5_hex_value(hex_digits) % k).cast("int").alias("cluster"), "vec_id")
         .groupBy("cluster")
         .agg(F.min("vec_id").alias("vec_id"))
     )
-    return embq.join(F.broadcast(seeds), "vec_id").select(
-        "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
-    )
-
-
-def _km_assign_expr(embq: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Map-side argmin, pure-JVM expression form: centroids collapse to ONE
-    broadcast row holding a sorted array<struct<cluster,c>>; each vector
-    folds over it computing squared distances and takes array_min of
-    (dist, cluster) structs — ties break toward the smaller cluster id in
-    both engines. Vectors never shuffle.
-
-    Kept as the reference twin of the Arrow kernel below (pinned equal in
-    tests/test_np_kernels.py): interpreted HOF lambdas cost ~1.7 s per
-    assignment pass at sf0.1 (2000 rows x 45 cells x 64 dims — measured
-    r14), which the NumPy batch path does in ~0.05 s with bit-identical
-    doubles."""
-    carr = centroids.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    dist_structs = F.transform(
-        F.col("cents"),
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("q"), s["c"], lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-            s["cluster"].alias("cluster"),
-        ),
-    )
-    best = F.array_min(dist_structs)
-    return embq.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "q", best["cluster"].alias("cluster"), best["dist"].alias("dist")
-    )
-
-
-# Row-chunk budget for the (rows x cells x dim) distance temp inside the
-# Arrow kernels: 32 MiB of float64 per chunk, so a corpus-sized cell count
-# (nlist = sqrt(N), e.g. 31.6k cells at 1e9 vectors) never materializes a
-# multi-GB intermediate inside one Python worker batch.
-_NP_CHUNK_BYTES = 32 * 1024 * 1024
-
-
-def _np_chunk_rows(n_cells: int, dim: int) -> int:
-    return max(1, _NP_CHUNK_BYTES // (8 * max(1, n_cells) * max(1, dim)))
 
 
 def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
@@ -156,62 +118,24 @@ def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     return sorted((int(r["cluster"]), list(r["c"])) for r in centroids.collect())
 
 
-def _km_assign(embq: DataFrame, centroids: DataFrame) -> DataFrame:
+def _km_assign(embq: DataFrame, rows: list[tuple[int, list[float]]]) -> DataFrame:
     """Map-side argmin via an Arrow-vectorized NumPy kernel (guide §4.2):
-    the ≤nlist-row centroid frame is collected once (driver-bounded, the
-    `_ordered_cells` precedent), shipped as a Spark broadcast, and each
-    Arrow batch computes every vector's squared distance to every centroid
-    in one vectorized pass. Vectors never shuffle and never cross a join —
-    the old BroadcastNestedLoop cross join disappears from the plan.
-
-    Numeric parity (the q_ann_topk_pandas doctrine): per-(vector,
-    centroid) distances reduce with ``np.cumsum(..., axis=-1)`` taking the
-    last column — a LEFT-TO-RIGHT sequential scan, the exact float-op
-    order of the JVM ``aggregate`` fold and the DuckDB list_sum twin
-    (a BLAS matmul would reassociate the additions and break the oracle
-    hash); ``np.argmin`` returns the FIRST minimum, which over the
-    cluster-sorted matrix is exactly array_min's (dist, cluster) tie
-    order. Pinned equal to `_km_assign_expr` in tests/test_np_kernels.py."""
-    rows = _centroid_rows(centroids)
-    if not rows:  # degenerate empty-centroid frame: keep the legacy shape
-        return _km_assign_expr(embq, centroids)
-    return _km_assign_rows(embq, rows)
-
-
-def _km_assign_rows(embq: DataFrame, rows: list[tuple[int, list[float]]]) -> DataFrame:
-    """`_km_assign`'s kernel over PRE-COLLECTED centroid rows (r15): the
-    training loop and the probe both need the collected rows, so collect
-    once and share. Preserves every input column (the serve paths carry
-    the raw embedding through the assignment, killing their vec_id
-    join-back)."""
-    sc = embq.sparkSession.sparkContext
-    bc = sc.broadcast(
-        (
-            np.array([c for _, c in rows], dtype=np.float64),
-            np.array([cl for cl, _ in rows], dtype=np.int64),
-        )
-    )
-    dim = len(rows[0][1])
-    chunk = _np_chunk_rows(len(rows), dim)
+    the collected, cluster-sorted centroid rows (`_centroid_rows`) ship as
+    a Spark broadcast and each Arrow batch assigns every vector with
+    `vector_kernels.argmin_sq` — the sequential-fold / first-argmin
+    contract that keeps the doubles and tie-breaks equal to the JVM
+    ``aggregate`` fold and the DuckDB oracle (pinned against the
+    expression twin in tests/test_np_kernels.py). Vectors never shuffle
+    and never cross a join. Keeps every input column (the serve paths
+    carry the raw embedding through the assignment) and adds (cluster,
+    dist)."""
+    bc = embq.sparkSession.sparkContext.broadcast(cents_arrays(rows))
 
     @F.pandas_udf("struct<cluster:int,dist:double>")
     def assign(q: pd.Series) -> pd.DataFrame:
         cents, clusters = bc.value
-        out_cl = np.empty(len(q), dtype=np.int64)
-        out_d = np.empty(len(q), dtype=np.float64)
-        vals = q.values
-        for lo in range(0, len(q), chunk):
-            part = vals[lo : lo + chunk]
-            qm = np.stack([np.asarray(v, dtype=np.float64) for v in part])
-            d = qm[:, None, :] - cents[None, :, :]
-            d *= d
-            dist = np.cumsum(d, axis=2)[:, :, -1]
-            idx = np.argmin(dist, axis=1)
-            out_cl[lo : lo + len(part)] = clusters[idx]
-            out_d[lo : lo + len(part)] = dist[np.arange(len(part)), idx]
-        return pd.DataFrame(
-            {"cluster": out_cl.astype("int32"), "dist": out_d}
-        )
+        idx, dist = argmin_sq(rows_matrix(q.values), cents)
+        return pd.DataFrame({"cluster": clusters[idx].astype("int32"), "dist": dist})
 
     return embq.withColumn("__r", assign("q")).select(
         *[F.col(c) for c in embq.columns],
@@ -220,56 +144,64 @@ def _km_assign_rows(embq: DataFrame, rows: list[tuple[int, list[float]]]) -> Dat
     )
 
 
-def _km_update(assigned: DataFrame) -> DataFrame:
-    """Centroid update as KM_DIM integer-sum aggregates + one count —
+def _km_update(assigned: DataFrame, dim: int = KM_DIM) -> DataFrame:
+    """Centroid update as ``dim`` integer-sum aggregates + one count —
     partial-aggregable (map-side combine) down to K rows; the single
-    sum/count division is the only float op, deterministic IEEE.  The 65
-    aggregates are ONE SQL expression string, not 65 Column objects —
+    sum/count division is the only float op, deterministic IEEE.  The
+    aggregates are ONE SQL expression string, not dim+1 Column objects —
     per-Column py4j round-trips cost ~1 s/call of pure driver time
     (same lesson as q_ann_ivf_topk, llm_ops.py)."""
     sums_sql = (
         "struct(count(1) as n, "
-        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(KM_DIM))
+        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(dim))
         + ") as acc"
     )
     arr_sql = (
-        "array(" + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(KM_DIM)) + ") as c"
+        "array(" + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(dim)) + ") as c"
     )
     return assigned.groupBy("cluster").agg(F.expr(sums_sql)).selectExpr("cluster", arr_sql)
 
 
-def _km_fit_frame(
-    embq: DataFrame,
-) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]] | None]:
-    """Frame-based Lloyd core (shared with the persisted ANN index, which
-    trains over snapshot-table corpora rather than the sf fixture).
-    Returns (final assignments, the centroid frame those assignments used,
-    the COLLECTED rows of that frame). The assignment kernel collects the
-    centroids every iteration anyway (r14); keeping the last collect lets
-    the IVF probe rank cells on the driver instead of re-executing the
-    centroid lineage (a full corpus pass) inside the serve plan (r15)."""
-    centroids = _km_seed_centroids(embq)
-    assigned = cents_used = rows_used = None
-    for _ in range(KM_ITERS):
-        cents_used = centroids
-        rows_used = _centroid_rows(centroids) or None
-        assigned = (
-            _km_assign_rows(embq, rows_used)
-            if rows_used
-            else _km_assign_expr(embq, centroids)
+def _km_train(
+    train: DataFrame,
+    k: int = KM_K,
+    hex_digits: int = 1,
+    iters: int = KM_ITERS,
+    dim: int = KM_DIM,
+) -> list[tuple[int, list[float]]]:
+    """The one Lloyd trainer (fixed-K k-means, the persisted index's
+    corpus-sized quantizer, SemDeDup): hash-seed k centroids, then
+    ``iters`` - 1 assign/update rounds. Returns the collected,
+    cluster-sorted centroid rows of the last update — the centroids the
+    caller's final assignment pass uses. Each round is one driver-bounded
+    ≤k-row collect (3 in all), so no caller re-executes a Lloyd lineage
+    and the IVF probe ranks cells from the same rows on the driver."""
+    seeds = _hash_seeds(train, k, hex_digits)
+    rows = _centroid_rows(
+        train.join(F.broadcast(seeds), "vec_id").select(
+            "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
         )
-        centroids = _km_update(assigned)
-    return assigned, cents_used, rows_used
+    )
+    for _ in range(iters - 1):
+        rows = _centroid_rows(_km_update(_km_assign(train, rows), dim))
+    return rows
 
 
-def _km_fit(
-    spark: SparkSession, sf: str
-) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]] | None]:
-    """Run KM_ITERS Lloyd iterations; returns (final assignments, the
-    centroids those assignments were computed against, the collected rows
-    of those centroids) — the probe must use them to stay consistent with
-    the cells."""
-    return _km_fit_frame(_km_quantized(spark, sf))
+def _km_fit_frame(
+    embq: DataFrame, base: DataFrame | None = None
+) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
+    """Fixed-K k-means over ``embq``: train, then the final assignment
+    pass over ``base`` (default ``embq``; a base carries extra columns,
+    e.g. the raw embedding, through the kernel so callers never join
+    back). Returns (final assignments, the centroid rows they used)."""
+    rows = _km_train(embq)
+    return _km_assign(embq if base is None else base, rows), rows
+
+
+def _km_fit(spark: SparkSession, sf: str) -> DataFrame:
+    """KM_ITERS Lloyd iterations over the fixture embeddings; returns the
+    final (vec_id, q, cluster, dist) assignments."""
+    return _km_fit_frame(_quantize(table(spark, sf, "embeddings")))[0]
 
 
 def q_embedding_kmeans(spark: SparkSession, sf: str) -> DataFrame:
@@ -282,8 +214,7 @@ def q_embedding_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     partial-agg groupBy to K rows. The vectors are scanned KM_ITERS times
     but NEVER shuffled; total shuffle volume is O(K · dim · partitions)
     per iteration — the canonical distributed k-means."""
-    assigned, _, _ = _km_fit(spark, sf)
-    return assigned.select("vec_id", "cluster", F.round("dist", 4).alias("dist"))
+    return _km_fit(spark, sf).select("vec_id", "cluster", F.round("dist", 4).alias("dist"))
 
 
 # 8-hex-digit md5 value as a BIGINT — DuckDB twin of Spark's
@@ -438,18 +369,13 @@ def _ivf_probe_clusters(
     the already-collected centroid rows (r15): K rows × dim doubles of
     arithmetic — the old in-plan probe (crossJoin the K-row centroid agg,
     orderBy, limit) re-executed the centroid lineage, a full corpus pass,
-    inside every serve plan. Float-op parity with the retired JVM fold:
-    np.cumsum over the squared per-dim deltas is the same left-to-right
-    sequential double fold, and the (dist, cluster) tuple sort is exactly
+    inside every serve plan. Distances are `vector_kernels.sq_dists` (the
+    JVM fold's op order) and the (dist, cluster) tuple sort is exactly
     orderBy(cdist, cluster). Pinned against the expression twin in
     tests/test_np_kernels.py."""
-    qv = qq.astype(np.float64)
-    scored = []
-    for cl, c in rows:
-        d = qv - np.asarray(c, dtype=np.float64)
-        d *= d
-        scored.append((float(np.cumsum(d)[-1]), cl))
-    scored.sort()
+    cents, clusters = cents_arrays(rows)
+    dists = sq_dists(qq[None, :], cents)[0]
+    scored = sorted(zip(dists.tolist(), clusters.tolist()))
     return [cl for _, cl in scored[:n_probes]]
 
 
@@ -457,45 +383,26 @@ def _fetch_qq(spark: SparkSession, sf: str) -> np.ndarray | None:
     """The quantized query vector (vec_id = 0) as a driver array, or None
     when the corpus has no query row — one pushdown-pruned 1-row job,
     shared by the probe and the ADC scorer."""
-    qrow = _km_quantized(spark, sf).filter(F.col("vec_id") == 0).select("q").head()
+    embq = _quantize(table(spark, sf, "embeddings"))
+    qrow = embq.filter(F.col("vec_id") == 0).select("q").head()
     return None if qrow is None else np.asarray(qrow[0], dtype=np.int64)
 
 
-def _ivf_cand_assigned(
-    spark: SparkSession,
-    sf: str,
-    base: DataFrame | None = None,
-    qq: np.ndarray | None = None,
+def _ivf_probe(
+    assigned: DataFrame, rows: list[tuple[int, list[float]]], qq: np.ndarray | None
 ) -> DataFrame:
-    """IVF candidate ROWS: k-means-train the coarse quantizer, rank the
-    query's IVF_PROBES nearest cells on the driver (`_ivf_probe_clusters`),
-    and return the final assignment pass filtered to those cells — ONE
-    corpus scan with a map-side cluster filter, zero joins, zero shuffles
-    (r15; the r14 shape broadcast-joined a probe frame whose lineage was a
-    full corpus pass, then the callers joined the candidates back to the
-    corpus by vec_id — a second full scan plus a fact-sized shuffle join).
-    ``base`` carries extra columns (e.g. the raw embedding) through the
-    assignment kernel so callers never join back. Returns every `embq`
-    column (or ``base``'s) plus (cluster, dist)."""
-    embq = _km_quantized(spark, sf)
-    assigned, cents, rows = _km_fit_frame(embq)
-    if not rows:  # degenerate empty corpus: nothing to probe or score
-        out = assigned if base is None else _km_assign_expr(base, cents)
-        return out.filter(F.col("vec_id") != 0).limit(0)
+    """IVF candidate ROWS: a final assignment pass (`_km_fit_frame`)
+    filtered to the query's IVF_PROBES nearest cells, ranked on the driver
+    from the centroid rows training collected (`_ivf_probe_clusters`) —
+    ONE corpus scan with a map-side cluster filter, zero joins, zero
+    shuffles (r15; the r14 shape broadcast-joined a probe frame whose
+    lineage was a full corpus pass, then joined the candidates back to
+    the corpus by vec_id). Without a query vector (an empty corpus
+    included) there are no candidates; ``assigned``'s columns stay."""
     if qq is None:
-        qq = _fetch_qq(spark, sf)
-    if qq is None:  # no query vector: the legacy plan returned no rows
-        out = assigned if base is None else _km_assign_rows(base, rows)
-        return out.filter(F.col("vec_id") != 0).limit(0)
+        return assigned.limit(0)
     probes = _ivf_probe_clusters(rows, qq)
-    out = assigned if base is None else _km_assign_rows(base, rows)
-    return out.filter(F.col("cluster").isin(probes) & (F.col("vec_id") != 0))
-
-
-def _ivf_cand(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF candidate vec_ids (the r13-shaped API, kept for the SQL-twin
-    docs): `_ivf_cand_assigned` projected to the id column."""
-    return _ivf_cand_assigned(spark, sf).select("vec_id")
+    return assigned.filter(F.col("cluster").isin(probes) & (F.col("vec_id") != 0))
 
 
 def q_ann_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -518,12 +425,8 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .llm_ops import _dot_expr, _norm_expr
 
     emb = table(spark, sf, "embeddings")
-    base = emb.select(
-        "vec_id",
-        "embedding",
-        F.transform("embedding", lambda x: F.floor(x.cast("double") * KM_SCALE)).alias("q"),
-    )
-    cand = _ivf_cand_assigned(spark, sf, base=base)
+    assigned, rows = _km_fit_frame(_quantize(emb), base=_quantize(emb, "embedding"))
+    cand = _ivf_probe(assigned, rows, _fetch_qq(spark, sf))
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
         _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
@@ -1164,27 +1067,6 @@ def _capped_cell_pairs(assigned: DataFrame, cell_cap: int, cos_floor: float) -> 
     )
 
 
-def _km_update_dim(assigned: DataFrame, dim: int) -> DataFrame:
-    """_km_update with a caller-chosen dimension (the shared helper pins
-    KM_DIM — the fixture width — and its source anchors eight recorded
-    oracle fingerprints, so the generic operator gets its own 3-liner)."""
-    sums_sql = (
-        "struct(count(1) as n, "
-        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(dim))
-        + ") as acc"
-    )
-    arr_sql = (
-        "array("
-        + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(dim))
-        + ") as c"
-    )
-    return (
-        assigned.groupBy("cluster")
-        .agg(F.expr(sums_sql))
-        .selectExpr("cluster", arr_sql)
-    )
-
-
 def semantic_dedup_pairs(
     embq: DataFrame,
     k: int,
@@ -1202,32 +1084,11 @@ def semantic_dedup_pairs(
     regardless (candidates ≤ k·cell_cap² even under skewed clustering).
 
     Input: (vec_id, q array<long>) integer-quantized embeddings (the
-    ``_km_quantized`` contract). Seeding re-states the md5-bucket rule
-    over 8 hex digits so it stays uniform for k > 16 — deliberately NOT a
-    parameterization of ``_km_seed_centroids``, whose source anchors the
-    recorded fingerprints of eight oracle entries. Per iteration:
-    broadcast-k centroids, map-side argmin, partial-agg update — vectors
-    never shuffle until the single cluster-keyed pair join."""
-    buck = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % k
-    )
-    seeds = (
-        embq.select(buck.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    centroids = embq.join(F.broadcast(seeds), "vec_id").select(
-        "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
-    )
-    assigned = None
-    for _ in range(iters):
-        assigned = _km_assign(embq, centroids)
-        centroids = _km_update_dim(assigned, dim)
+    ``_quantize`` contract). Training is `_km_train` with 8-hex-digit
+    seeding, so it stays uniform for k > 16. Per iteration: broadcast-k
+    centroids, map-side argmin, partial-agg update — vectors never
+    shuffle until the single cluster-keyed pair join."""
+    assigned = _km_assign(embq, _km_train(embq, k, hex_digits=8, iters=iters, dim=dim))
     return _capped_cell_pairs(assigned, cell_cap, cos_floor)
 
 
@@ -1249,8 +1110,7 @@ def q_dedup_semantic_cells(spark: SparkSession, sf: str) -> DataFrame:
     compiles to WindowGroupLimit). Similarity is cosine over the same
     integer-quantized vectors the clustering uses, so both engines are
     bit-exact; distances compare after the same 4dp rounding both emit."""
-    assigned, _, _ = _km_fit(spark, sf)
-    return _capped_cell_pairs(assigned, SEMDEDUP_CELL_CAP, SEMDEDUP_COS)
+    return _capped_cell_pairs(_km_fit(spark, sf), SEMDEDUP_CELL_CAP, SEMDEDUP_COS)
 
 
 def _semantic_cells_sql() -> str:
@@ -1295,9 +1155,9 @@ def q_semantic_cell_audit(spark: SparkSession, sf: str) -> DataFrame:
     production audits pass ``SEMDEDUP_CELL_CAP``. An operator watching
     this row stream resizes K (see :func:`semantic_dedup_pairs`) when
     cells outgrow the cap."""
-    assigned, _, _ = _km_fit(spark, sf)
     return (
-        assigned.groupBy("cluster")
+        _km_fit(spark, sf)
+        .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_members"))
         .filter(F.col("n_members") > SEMDEDUP_AUDIT_CAP)
         .select(
@@ -2899,71 +2759,6 @@ def _pq_subrows(embq: DataFrame) -> DataFrame:
     return embq.select("vec_id", "q", m).withColumn("sq", sub).drop("q")
 
 
-def _pq_fit_frame(embq: DataFrame) -> DataFrame:
-    """Train all PQ_M codebooks in ONE grouped Lloyd's loop: assignment is
-    a per-(vec,subspace) argmin against that subspace's 16 centroids
-    (128-row broadcast), update is a (m, cluster)-keyed integer-sum
-    partial agg — the same machinery as `_km_fit`, keyed by subspace.
-    Returns the trained codebook (m, cluster, c[PQ_SUB] doubles)."""
-    sub_rows = _pq_subrows(embq)
-    hex1 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 1)
-    bucket = F.conv(hex1, 16, 10).cast("int") % PQ_K
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    cents = sub_rows.join(F.broadcast(seeds), "vec_id").select(
-        "m", "cluster", F.transform("sq", lambda x: x.cast("double")).alias("c")
-    )
-    for _ in range(PQ_ITERS - 1):
-        assigned = _pq_assign(sub_rows, cents)
-        cents = _pq_update(assigned)
-    return cents
-
-
-def _pq_fit(spark: SparkSession, sf: str) -> DataFrame:
-    return _pq_fit_frame(_km_quantized(spark, sf))
-
-
-def _pq_cents_by_m(cents: DataFrame):
-    """Collapse the codebook to ONE broadcastable row: cents[m+1] = the
-    m-th subspace's 16 (cluster, c) structs, cluster-sorted."""
-    return (
-        cents.groupBy("m")
-        .agg(F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cm"))
-        .agg(F.array_sort(F.collect_list(F.struct("m", "cm"))).alias("byms"))
-        .select(F.transform("byms", lambda s: s["cm"]).alias("cents"))
-    )
-
-
-def _pq_assign_expr(sub_rows: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-(vec, subspace) argmin, pure-JVM expression form — map-side
-    against the broadcast codebook row; ties break toward the smaller
-    cluster id. Reference twin of the Arrow kernel below (pinned equal in
-    tests/test_np_kernels.py)."""
-    carr = _pq_cents_by_m(cents)
-    my_cents = F.element_at(F.col("cents"), (F.col("m") + 1).cast("int"))
-    dist_structs = F.transform(
-        my_cents,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("sq"), s["c"],
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-            s["cluster"].alias("cluster"),
-        ),
-    )
-    best = F.array_min(dist_structs)
-    return sub_rows.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "m", "sq", best["cluster"].alias("cluster")
-    )
-
-
 def _codebook_rows(cents: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
     """Driver-bounded collect of a PQ codebook frame (≤PQ_M·PQ_K = 128
     rows): {m: [(cluster, c), ...] sorted by cluster} — the argmin tie
@@ -2974,42 +2769,42 @@ def _codebook_rows(cents: DataFrame) -> dict[int, list[tuple[int, list[float]]]]
     return {m: sorted(v) for m, v in by_m.items()}
 
 
-def _pq_assign(sub_rows: DataFrame, cents: DataFrame) -> DataFrame:
+def _pq_fit(embq: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
+    """Train all PQ_M codebooks in ONE grouped Lloyd's loop: assignment is
+    a per-(vec,subspace) argmin against that subspace's 16 centroids
+    (128-row broadcast), update is a (m, cluster)-keyed integer-sum
+    partial agg — the same machinery as `_km_train`, keyed by subspace.
+    Returns the collected codebook (`_codebook_rows`)."""
+    sub_rows = _pq_subrows(embq)
+    seeds = _hash_seeds(embq, PQ_K, hex_digits=1)
+    cents = sub_rows.join(F.broadcast(seeds), "vec_id").select(
+        "m", "cluster", F.transform("sq", lambda x: x.cast("double")).alias("c")
+    )
+    for _ in range(PQ_ITERS - 1):
+        cents = _pq_update(_pq_assign(sub_rows, _codebook_rows(cents)))
+    return _codebook_rows(cents)
+
+
+def _pq_assign(sub_rows: DataFrame, book) -> DataFrame:
     """Per-(vec, subspace) argmin via an Arrow-vectorized NumPy kernel
-    (guide §4.2): the ≤128-row codebook is collected once and broadcast;
-    each Arrow batch groups its rows by subspace and computes every
-    subvector's distance to that subspace's centroids in one vectorized
-    pass. Same cumsum/first-argmin numeric-parity contract as
-    `_km_assign`; pinned equal to `_pq_assign_expr` in
-    tests/test_np_kernels.py."""
-    book = _codebook_rows(cents)
-    if not book:
-        return _pq_assign_expr(sub_rows, cents)
-    sc = sub_rows.sparkSession.sparkContext
-    bc = sc.broadcast(
-        {
-            m: (
-                np.array([c for _, c in rows], dtype=np.float64),
-                np.array([cl for cl, _ in rows], dtype=np.int64),
-            )
-            for m, rows in book.items()
-        }
+    (guide §4.2): the ≤128-row collected codebook is broadcast; each Arrow
+    batch groups its rows by subspace and assigns every subvector with
+    `vector_kernels.argmin_sq` (pinned equal to the expression twin in
+    tests/test_np_kernels.py)."""
+    bc = sub_rows.sparkSession.sparkContext.broadcast(
+        {m: cents_arrays(rows) for m, rows in book.items()}
     )
 
     @F.pandas_udf("int")
     def passign(m: pd.Series, sq: pd.Series) -> pd.Series:
         books = bc.value
         ms = m.values.astype(np.int64)
+        sub = rows_matrix(sq.values)
         out = np.empty(len(ms), dtype=np.int64)
-        sqv = sq.values
         for mm in np.unique(ms):
             mask = np.nonzero(ms == mm)[0]
-            sub = np.stack([np.asarray(sqv[i], dtype=np.float64) for i in mask])
             cents_m, clusters_m = books[int(mm)]
-            d = sub[:, None, :] - cents_m[None, :, :]
-            d *= d
-            dist = np.cumsum(d, axis=2)[:, :, -1]
-            out[mask] = clusters_m[np.argmin(dist, axis=1)]
+            out[mask] = clusters_m[argmin_sq(sub[mask], cents_m)[0]]
         return pd.Series(out).astype("int32")
 
     return sub_rows.select(
@@ -3056,56 +2851,22 @@ def q_ann_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     the PQ-reconstructed vector vs the exact query, rounded to 4dp.
     The 1-row query fetch overlaps the codebook training from a second
     driver thread (guide §2.6)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    embq = _km_quantized(spark, sf)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_qq = pool.submit(inheritable_thread_target(spark)(lambda: _fetch_qq(spark, sf)))
-        f_book = pool.submit(
-            inheritable_thread_target(spark)(lambda: _codebook_rows(_pq_fit(spark, sf)))
-        )
-        qq, book = f_qq.result(), f_book.result()
-    if qq is None:
-        raise ValueError("q_ann_pq_topk: no query vector (vec_id = 0)")
-    return _pq_adc_topk(
-        spark, sf, embq.filter(F.col("vec_id") != 0), book=book, qq=qq
+    embq = _quantize(table(spark, sf, "embeddings"))
+    qq, book = run_concurrently(
+        spark, lambda: _fetch_qq(spark, sf), lambda: _pq_fit(embq)
     )
+    return _pq_adc_topk(embq.filter(F.col("vec_id") != 0), book, qq)
 
 
-def _pq_adc_topk(
-    spark: SparkSession,
-    sf: str,
-    corpus: DataFrame,
-    book=None,
-    qq: np.ndarray | None = None,
-) -> DataFrame:
-    """ADC top-10 over ``corpus`` (a (vec_id, q) frame): train the PQ
-    codebook, then score every candidate against the query through an
+def _pq_adc_topk(corpus: DataFrame, book, qq: np.ndarray | None) -> DataFrame:
+    """ADC top-10 over ``corpus`` (a (vec_id, q) frame) under the trained
+    codebook ``book``: score every candidate against the query through an
     Arrow-vectorized NumPy kernel (guide §4.2) and TakeOrdered. Shared by
     whole-corpus PQ and IVF-PQ (which passes the probed-cell candidates
-    only).
-
-    The kernel replicates the JVM expression fold op-for-op (cumsum =
-    sequential left fold; first-argmin over the cluster-sorted codebook =
-    array_min's (dist, cluster) tie order; per-subspace partials folded in
-    fixed m order; qnorm an exact integer sum) — pinned equal to the
-    retired expression form by the unchanged DuckDB oracle and
-    tests/test_np_kernels.py. The codebook collect is ≤PQ_M·PQ_K = 128
-    rows; the query collect is one row — both driver-bounded.
-    ``book`` lets a caller that already trained (or trained concurrently
-    — q_ann_ivfpq_topk overlaps the IVF and PQ chains, guide §2.6) pass
-    the collected codebook in."""
-    if book is None:
-        book = _codebook_rows(_pq_fit(spark, sf))
+    only). Raises ValueError when there is no query vector (vec_id = 0)."""
     if qq is None:
-        qq = _fetch_qq(spark, sf)
-        if qq is None:
-            raise ValueError(
-                "_pq_adc_topk: no query vector (vec_id = 0) in the corpus"
-            )
-    adc = _adc_cos_udf(spark, book, qq)
+        raise ValueError("ANN PQ serve: no query vector (vec_id = 0) in the corpus")
+    adc = _adc_cos_udf(corpus.sparkSession, book, qq)
     return (
         corpus.select("vec_id", F.round(adc(F.col("q")), 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
@@ -3117,46 +2878,24 @@ def _adc_cos_udf(spark: SparkSession, book, qq: np.ndarray):
     """Arrow kernel: ADC cosine of each row's quantized vector ``q``
     against the fixed quantized query ``qq`` under PQ codebook ``book``
     ({m: [(cluster, c), ...] cluster-sorted}). Per subspace the candidate
-    subvector picks its nearest codeword (sequential-fold distances,
-    first-min ties) and contributes dot/sq partials from the RECONSTRUCTED
-    codeword; partials fold in fixed m order. Bit-identical to the JVM
-    `_per_m` expression chain it replaces."""
-    cents_by_m = {
-        m: (
-            np.array([c for _, c in rows], dtype=np.float64),
-            np.array([cl for cl, _ in rows], dtype=np.int64),
-        )
-        for m, rows in book.items()
-    }
-    bc = spark.sparkContext.broadcast(cents_by_m)
-    q_acc = 0
-    for x in qq.tolist():  # exact integer norm fold, matching the JVM long fold
-        q_acc += x * x
-    qnorm = float(np.sqrt(float(q_acc)))
-    qv = qq.astype(np.float64)
+    subvector picks its nearest codeword (`vector_kernels.argmin_sq`) and
+    `vector_kernels.adc_cos` folds the reconstructed codewords against
+    the query — bit-identical to the JVM `_per_m` expression chain it
+    replaced (the unchanged DuckDB oracle pins it)."""
+    bc = spark.sparkContext.broadcast(
+        [cents_arrays(book[m])[0] for m in range(PQ_M)]
+    )
+    qv, qnorm = qq.astype(np.float64), int_norm(qq)
 
     @F.pandas_udf("double")
     def adc(q: pd.Series) -> pd.Series:
         books = bc.value
-        if len(q) == 0:
-            return pd.Series([], dtype="float64")
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q.values])
-        n = qm.shape[0]
-        dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-        sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-        for m in range(PQ_M):
-            cents_m, _ = books[m]
-            sub = qm[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            d = sub[:, None, :] - cents_m[None, :, :]
-            d *= d
-            idx = np.argmin(np.cumsum(d, axis=2)[:, :, -1], axis=1)
-            c = cents_m[idx]
-            qsub = qv[m * PQ_SUB : (m + 1) * PQ_SUB]
-            dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-            sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-        dots = np.cumsum(dot_parts, axis=1)[:, -1]
-        sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-        return pd.Series(dots / (np.sqrt(sqs) * qnorm))
+        qm = rows_matrix(q.values)
+        words = [
+            books[m][argmin_sq(qm[:, m * PQ_SUB : (m + 1) * PQ_SUB], books[m])[0]]
+            for m in range(PQ_M)
+        ]
+        return pd.Series(adc_cos(words, qv, qnorm))
 
     return adc
 
@@ -3248,7 +2987,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     (IndexIVFPQ): the k-means coarse quantizer routes the query to its
     IVF_PROBES nearest cells, and only THOSE cells' vectors are scored,
     by PQ codes against the full-precision query (ADC). Composes two
-    independently-verified stages: `_ivf_cand` (the `ann_ivf_kmeans_topk`
+    independently-verified stages: `_ivf_probe` (the `ann_ivf_kmeans_topk`
     probe) and `_pq_adc_topk` (the `ann_pq_topk` scorer). Direct-coding
     variant: codes quantize the vectors themselves, not the residuals
     against the coarse centroid (FAISS's refinement) — residual coding
@@ -3264,29 +3003,21 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     — (m, cluster)-keyed partial aggs. The whole serve plan is ONE corpus
     scan (r15 — the r14 shape re-joined the candidate ids to the corpus
     by vec_id, a fact-sized shuffle join, and re-executed the centroid
-    lineage inside the probe). The IVF and PQ training chains are
-    INDEPENDENT (coarse cells vs per-subspace codebooks over the same
-    quantized corpus), and each is a short series of driver-bounded
-    collect jobs — so they run CONCURRENTLY from two driver threads
-    (guide §2.6: overlap independent jobs; the retrain-per-serve shape
-    is this entry's whole point, so the training latency IS the measured
-    cost — measured ~7 sequential jobs before, max(3, 3) + serve after)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_qq = pool.submit(inheritable_thread_target(spark)(lambda: _fetch_qq(spark, sf)))
-        f_cand = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _ivf_cand_assigned(spark, sf, qq=f_qq.result())
-            )
-        )
-        f_book = pool.submit(
-            inheritable_thread_target(spark)(lambda: _codebook_rows(_pq_fit(spark, sf)))
-        )
-        cand, book, qq = f_cand.result(), f_book.result(), f_qq.result()
-    return _pq_adc_topk(spark, sf, cand.select("vec_id", "q"), book=book, qq=qq)
+    lineage inside the probe). The IVF fit, the PQ codebook and the
+    1-row query fetch are INDEPENDENT, each a short series of
+    driver-bounded collect jobs — so they run CONCURRENTLY from three
+    driver threads (`run_concurrently`; guide §2.6: overlap independent
+    jobs; the retrain-per-serve shape is this entry's whole point, so the
+    training latency IS the measured cost); the probe then filters on the
+    driver."""
+    embq = _quantize(table(spark, sf, "embeddings"))
+    (assigned, rows), book, qq = run_concurrently(
+        spark,
+        lambda: _km_fit_frame(embq),
+        lambda: _pq_fit(embq),
+        lambda: _fetch_qq(spark, sf),
+    )
+    return _pq_adc_topk(_ivf_probe(assigned, rows, qq).select("vec_id", "q"), book, qq)
 
 
 def _sql_serve_probes(probe_c: str) -> str:
@@ -3385,7 +3116,7 @@ def q_ann_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
 
     Determinism: similarities are integer-exact (quantized grid) rounded
     to 6dp BEFORE blending; ties break to the smaller vec_id."""
-    embq = _km_quantized(spark, sf)
+    embq = _quantize(table(spark, sf, "embeddings"))
     q0 = embq.filter(F.col("vec_id") == 0).select(F.col("q").alias("qq"))
     pool = (
         embq.filter(F.col("vec_id") != 0)
@@ -3513,7 +3244,7 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     integer-preserving substitution x' = n·x − Σx (same direction,
     DECIMAL(38,0) sums), noted as the extension rather than silently
     approximated."""
-    embq = _km_quantized(spark, sf)
+    embq = _quantize(table(spark, sf, "embeddings"))
     v = spark.range(1).select(
         F.expr("array(" + ", ".join(["0.125D"] * KM_DIM) + ")").alias("v")
     )

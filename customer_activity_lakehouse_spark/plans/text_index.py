@@ -490,9 +490,9 @@ def q_hybrid_index_rrf(spark: SparkSession, sf: str) -> DataFrame:
     full-corpus text index fused with vec_id 0's neighbors from the
     memoized ANN index (`serve_hybrid_rrf`)."""
     from .ann_index import _index_dir
-    from .ml_ops import _km_quantized
+    from .ml_ops import _quantize
 
-    q0 = _km_quantized(spark, sf).filter(F.col("vec_id") == 0)
+    q0 = _quantize(table(spark, sf, "embeddings")).filter(F.col("vec_id") == 0)
     return serve_hybrid_rrf(
         spark,
         _full_idx_dir(spark, sf),

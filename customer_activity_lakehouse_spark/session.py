@@ -135,3 +135,23 @@ def get_spark(
                 stacklevel=2,
             )
     return spark
+
+
+def run_concurrently(spark: SparkSession, *thunks):
+    """Run independent driver-side thunks (each a short series of Spark
+    jobs) from one thread each and return their results in argument
+    order. Every thunk finishes before the call returns or raises; the
+    first failure in argument order propagates. Each thunk is
+    wrapped on the calling thread with ``inheritable_thread_target`` so its
+    jobs keep the caller's job group, local properties and tags. With
+    pinned-thread mode off, pyspark returns the session itself instead of
+    a wrapper, and the thunks run unwrapped."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    targets = [wrap(t) if callable(wrap) else t for t in thunks]
+    with ThreadPoolExecutor(max_workers=max(1, len(targets))) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return [f.result() for f in futures]

@@ -15,6 +15,7 @@ Contract under test:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from customer_activity_lakehouse_spark.plans.ann_index import (
@@ -84,6 +85,27 @@ def test_build_then_query_serves_without_training(spark, tmp_path):
         re.search(r"cell=(\d+)", f).group(1) for f in probed_code_files
     }
     assert len(cells_read) <= n_probe
+
+
+def test_failed_metadata_commit_leaves_no_codes(spark, tmp_path, monkeypatch):
+    """``codes`` commits only after both metadata tables committed: when
+    the pq_codebooks commit fails, the build raises and ``codes`` has no
+    committed version, so serve and maintain never see a half index."""
+    from customer_activity_lakehouse_spark.sources import snapshots
+
+    real_commit = snapshots.commit_append
+
+    def failing_commit(spark_, table_dir, *args, **kwargs):
+        if table_dir.endswith("/pq_codebooks"):
+            raise OSError("injected pq_codebooks commit failure")
+        return real_commit(spark_, table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "commit_append", failing_commit)
+    idx = str(tmp_path / "idx")
+    with pytest.raises(OSError, match="injected"):
+        build_ann_index(spark, _corpus(spark, 0, 60), idx)
+    assert _list_versions(spark, f"{idx}/codes") == []
+    assert _list_versions(spark, f"{idx}/pq_codebooks") == []
 
 
 def test_maintain_encodes_only_new_vectors_with_frozen_books(spark, tmp_path):
@@ -543,18 +565,18 @@ def test_sampled_training_deterministic_and_covering(spark):
     embq = _quantize(_corpus(spark, 0, 400))
     c1 = _km_fit_scaled(embq, 12, divisor=3)
     c2 = _km_fit_scaled(embq, 12, divisor=3)
-    assert c1.collect() == c2.collect()  # deterministic training
-    # the fit returns centroids only (r14); the full-corpus assignment is
-    # the caller's single encode pass — run it explicitly here
+    assert c1 == c2  # deterministic training
+    # the fit returns centroid rows only (r14); the full-corpus assignment
+    # is the caller's single encode pass — run it explicitly here
     rows = _km_assign(embq, c1).select("vec_id", "cluster").collect()
     assert len(rows) == 400  # final assignment covers the FULL corpus
     assert len({r.vec_id for r in rows}) == 400
     cells_used = {r.cluster for r in rows}
-    assert cells_used <= {int(r.cluster) for r in c1.collect()}
+    assert cells_used <= {cl for cl, _ in c1}
     # the sample-trained centroids differ from full-corpus training's
     # (different update statistics) but the cell count is comparable
     c_full = _km_fit_scaled(embq, 12, divisor=1)
-    assert 1 <= c1.count() <= 12 and 1 <= c_full.count() <= 12
+    assert 1 <= len(c1) <= 12 and 1 <= len(c_full) <= 12
 
 
 def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
