@@ -206,7 +206,7 @@ def build_ann_index(
     silently approximated). Training is the only stage that shuffles
     (nlist-row / (m, cluster)-keyed partial aggs); codes assign in-row
     and land partitioned by cell, one file per cell."""
-    from ..sources.snapshots import commit_append
+    from ..sources.snapshots import commit_append, commit_overwrite
 
     n = emb.count()  # one metadata-cheap single-column scan
     n_cells = cells if cells is not None else _ivf_cells(n)
@@ -248,13 +248,15 @@ def build_ann_index(
     n_parts = max(1, min(int(n_cells), spark.sparkContext.defaultParallelism))
     # the two K-row metadata tables commit concurrently; ``codes`` (what
     # serve and maintain look for) commits only after both succeeded, so
-    # a failed build never leaves codes visible without their codebooks
+    # a failed build never leaves codes visible without their codebooks.
+    # Each build REPLACES them: a retry after a failed build must not
+    # stack a second copy of the centroids on the first attempt's
     run_concurrently(
         spark,
-        lambda: commit_append(
+        lambda: commit_overwrite(
             spark, f"{index_dir}/ivf_centroids", _local_cents(spark, crows)
         ),
-        lambda: commit_append(
+        lambda: commit_overwrite(
             spark,
             f"{index_dir}/pq_codebooks",
             _local_books(spark, book).orderBy("m", "cluster"),

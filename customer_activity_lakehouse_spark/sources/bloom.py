@@ -10,13 +10,16 @@ per-file bloom filter index stored OUTSIDE the log; same design here:
   "k": hashes}`` (PHYSICAL column names: stable across renames), set via
   :func:`snapshots.set_bloom_filter` and carried with every commit like
   CHECK constraints. O(columns) per commit, never O(files).
-- **build** — each write-class commit indexes its NEW files in one
-  distributed, column-pruned pass: k positions per row via
-  ``pmod(xxhash64(col, seed), m)`` (JVM-side, whole-stage codegen), the
-  per-file distinct-position set via a map-side-combining ``collect_set``
-  (bounded by m per file), bit-packed to m/8 bytes by an Arrow-batched
-  pandas UDF. The driver only ever holds |new files in this batch| x m/8
-  bytes — batch-sized, like the stats pass it rides beside.
+- **build** — each write-class commit indexes its NEW files in ONE
+  Spark job over all bloom columns: the files are read with their own
+  footer's schema of the bloom columns (no schema-inference job), k
+  positions per row come from ``pmod(xxhash64(col, seed), m)``
+  (JVM-side, whole-stage codegen), and a ``mapInArrow`` ORs them into
+  one m-bit bitmap per (file, column) its task saw — no shuffle. The
+  driver ORs the partial bitmaps of files split across tasks, so it only
+  ever holds |new files in this batch| x |columns| x m/8 bytes —
+  batch-sized. The commit's [min, max] stats come from the same files'
+  parquet footers and cost no job at all.
 - **storage** — ONE sidecar JSON per commit under ``<table>/_bloom/``;
   each covered file's stats entry carries the sidecar's relative path
   under the reserved ``__bloom`` key, so coverage replays through the
@@ -48,23 +51,15 @@ from __future__ import annotations
 
 import base64
 import json
-import re
 
-import pandas as pd  # module-level: string type hints (PEP 563) must
-# resolve against module globals when Spark infers the pandas UDF type
+from pyspark.sql import SparkSession
 
-from pyspark.sql import DataFrame, SparkSession
+from . import commitlog
 
 SIDECAR_DIR = "_bloom"
 
 # reserved stats key holding a file's sidecar pointer (beside __rows)
 STATS_KEY = "__bloom"
-
-
-def _norm(p: str) -> str:
-    """Collapse URI-scheme spelling differences (``file:/x`` vs
-    ``file:///x``) to the bare path, same as snapshots._file_stats."""
-    return re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
 
 
 def _position_cols(cols: list[str], m: int, k: int):
@@ -81,53 +76,111 @@ def _position_cols(cols: list[str], m: int, k: int):
     }
 
 
+def _or_positions(cols: list[str], m: int):
+    """mapInArrow body: OR each row's positions into one m-bit bitmap per
+    (file, column) the task saw, and emit those bitmaps (LSB-first bit
+    order: position p is bit p & 7 of byte p >> 3). Null position arrays
+    (null key values) set nothing, and a (file, column) with no non-null
+    value emits nothing."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        acc: dict[tuple[str, str], np.ndarray] = {}
+        for b in batches:
+            enc = pc.dictionary_encode(b.column("__file"))
+            names = enc.dictionary.to_pylist()
+            fid = enc.indices.to_numpy()
+            for c in cols:
+                arr = b.column(c)
+                if arr.null_count == len(arr):
+                    continue
+                ps = pc.list_flatten(arr).to_numpy()
+                owner = fid[pc.list_parent_indices(arr).to_numpy()]
+                for u in np.unique(owner):
+                    bits = acc.get((names[u], c))
+                    if bits is None:
+                        bits = acc[(names[u], c)] = np.zeros(m, dtype=bool)
+                    bits[ps[owner == u]] = True
+        if acc:
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "__file": [f for f, _ in acc],
+                    "__col": [c for _, c in acc],
+                    "__bits": [
+                        np.packbits(v, bitorder="little").tobytes()
+                        for v in acc.values()
+                    ],
+                }
+            )
+
+    return run
+
+
 def file_blooms(
     spark: SparkSession, files: list[str], cols: list[str], m: int, k: int
 ) -> dict[str, dict[str, str]]:
     """``{file: {col: base64 bitmap}}`` for every bloom column present in
-    ``files`` — one column-pruned scan per bloom column (spec sizes are
-    1-2 columns). Null key values are excluded (a probe for None never
-    prunes). The shuffle is bounded: collect_set's map-side partial
-    already holds <= m positions per (task, file), and the pandas UDF
-    packs bits executor-side so only m/8-byte bitmaps reach the driver."""
+    ``files`` — files in ``files`` order, columns in ``cols`` order. Null
+    key values are excluded (a probe for None never prunes); a column
+    absent from a file, or all null in it, gets no bitmap.
+
+    ONE scan over all bloom columns per written schema: each file is read
+    with its own footer's Spark schema of the bloom columns (so every
+    file hashes under the type it was written with, and no
+    schema-inference job runs), its positions are OR-ed into per-(file,
+    column) bitmaps inside a ``mapInArrow`` (no shuffle), and the driver
+    ORs the partial bitmaps of files split across tasks. Only m/8-byte
+    bitmaps reach the driver. Files without a readable Spark footer are
+    read with an inferred schema."""
+    import numpy as np
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    df = spark.read.parquet(*files)
-    present = [c for c in cols if c in df.columns]
-    if not present:
-        return {}
-
-    @F.pandas_udf("binary")
-    def _pack(ps: pd.Series) -> pd.Series:
-        import numpy as np
-
-        def one(positions):
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            a = np.asarray(positions, dtype=np.int64)
-            np.bitwise_or.at(
-                bits, a >> 3, (np.uint8(1) << (a & 7).astype(np.uint8))
-            )
-            return bits.tobytes()
-
-        return ps.map(one)
-
-    pos = _position_cols(present, m, k)
-    out: dict[str, dict[str, str]] = {}
-    for c in present:
+    groups: dict[str | None, list[str]] = {}
+    for f in files:
+        _, fields = commitlog.read_footer(f) or (None, None)
+        key = None
+        if fields is not None:
+            key = json.dumps([fields[c] for c in cols if c in fields])
+        groups.setdefault(key, []).append(f)
+    parts: dict[tuple[str, str], np.ndarray] = {}
+    for key, fs in groups.items():
+        if key is None:
+            df = spark.read.parquet(*fs)
+        else:
+            fields = json.loads(key)
+            if not fields:
+                continue
+            schema = StructType.fromJson({"type": "struct", "fields": fields})
+            df = spark.read.schema(schema).parquet(*fs)
+        present = [c for c in cols if c in df.columns]
+        if not present:
+            continue
+        pos = _position_cols(present, m, k)
         rows = (
-            df.where(F.col(c).isNotNull())
-            .select(F.input_file_name().alias("__file"), pos[c].alias("__ps"))
-            .select("__file", F.explode("__ps").alias("__p"))
-            .groupBy("__file")
-            .agg(F.collect_set("__p").alias("__set"))
-            .select("__file", _pack("__set").alias("__bits"))
+            df.select(
+                F.input_file_name().alias("__file"),
+                *[F.when(F.col(c).isNotNull(), pos[c]).alias(c) for c in present],
+            )
+            .mapInArrow(
+                _or_positions(present, m),
+                "__file string, __col string, __bits binary",
+            )
             .collect()
         )
-        by_path = {_norm(r["__file"]): bytes(r["__bits"]) for r in rows}
+        for r in rows:
+            fc = (commitlog.normpath(r["__file"]), r["__col"])
+            bits = np.frombuffer(bytes(r["__bits"]), dtype=np.uint8)
+            parts[fc] = bits if fc not in parts else parts[fc] | bits
+    out: dict[str, dict[str, str]] = {}
+    for c in cols:
         for f in files:
-            bm = by_path.get(_norm(f))
+            bm = parts.get((commitlog.normpath(f), c))
             if bm is not None:
-                out.setdefault(f, {})[c] = base64.b64encode(bm).decode()
+                out.setdefault(f, {})[c] = base64.b64encode(bm.tobytes()).decode()
     return out
 
 
@@ -355,7 +408,7 @@ class SidecarCache:
             else:
                 parsed = json.loads(raw.decode())
                 car = {
-                    (_norm(f), c): base64.b64decode(b)
+                    (commitlog.normpath(f), c): base64.b64decode(b)
                     for f, cols in parsed["files"].items()
                     for c, b in cols.items()
                 }
@@ -364,4 +417,4 @@ class SidecarCache:
             _GLOBAL_CARS[key] = car
         if car is None:
             return None
-        return car.get((_norm(file), col))
+        return car.get((commitlog.normpath(file), col))

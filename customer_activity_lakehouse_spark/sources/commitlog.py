@@ -222,6 +222,61 @@ def is_local(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
 
+_SCHEME = re.compile(r"^[a-zA-Z0-9+.-]+:/+")
+
+
+def normpath(p: str) -> str:
+    """Manifest paths and scan paths spell schemes differently (Hadoop's
+    ``file:/x``, ``input_file_name()``'s ``file:///x``) — compare on the
+    bare path."""
+    return _SCHEME.sub("/", p)
+
+
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_footer(path: str):
+    """``(FileMetaData, {column: Spark StructField JSON} or None)`` of a
+    data file from its parquet footer — one small driver-side read, no
+    Spark job. The field map is None when Spark did not write the file;
+    the whole result is None when pyarrow cannot open it (non-local
+    schemes)."""
+    if not is_local(path):
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.read_metadata(localize(path))
+    except (OSError, ValueError):
+        return None
+    raw = (md.metadata or {}).get(_SPARK_ROW_META)
+    if raw is None:
+        return md, None
+    return md, {fd["name"]: fd for fd in json.loads(raw)["fields"]}
+
+
+def stat_val(v, side: int):
+    """JSON-safe, order-preserving encoding of one per-file stat bound
+    (``side`` < 0 for a min, > 0 for a max) — the one encoder of every
+    stats writer: the footer decoder and aggregate pass of
+    ``snapshots._file_stats`` and the Python DataSource writer's tasks.
+    Numbers stay numeric; dates/timestamps become ISO strings (which
+    compare in the same order as the values, all skipping needs).
+    Decimals must NOT be stringified — '9.5' > '10.5' lexicographically,
+    so string stats would make skip_where a WRONG filter. They become
+    floats WIDENED OUTWARD (min nudged down, max nudged up): a
+    rounded-inward bound could prune a file whose true extremum matches;
+    widening only ever costs reading one extra file."""
+    import decimal
+    import math
+
+    if v is None or isinstance(v, (int, float, str, bool)):
+        return v
+    if isinstance(v, decimal.Decimal):
+        return math.nextafter(float(v), -math.inf if side < 0 else math.inf)
+    return str(v)
+
+
 def publish_exclusive(path: str, data: bytes) -> bool:
     """Atomically publish ``data`` at ``path`` iff nothing is there: write
     a writer-unique temp in the same dir, then ``os.link`` it to ``path``.

@@ -539,24 +539,6 @@ class _FileCommit(WriterCommitMessage):
     entries: list = _dc_field(default_factory=list)
 
 
-def _py_stat_val(v, side: int):
-    """JSON-safe stat encoding, mirroring snapshots._file_stats.js for the
-    types the writer records (decimals widen OUTWARD so pruning can never
-    drop a boundary file)."""
-    import decimal as _decimal
-    import math as _math
-
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    if isinstance(v, _decimal.Decimal):
-        f = float(v)
-        return _math.nextafter(f, -_math.inf if side < 0 else _math.inf)
-    # dates/timestamps (and anything else ISO-printable): same str()
-    # fallback as the JVM encoder — compares in value order, all skipping
-    # needs
-    return str(v)
-
-
 # Layout-column prefix for partitioned writes — keep in sync with
 # snapshots._PART_PREFIX (pinned by a test); defined locally so write()
 # tasks never import the JVM-side module.
@@ -692,8 +674,8 @@ class _SnapshotArrowWriter(DataSourceArrowWriter):
             st["writer"].close()
             stats = {
                 (self._colmap or {}).get(c, c): [
-                    _py_stat_val(mm[0], -1),
-                    _py_stat_val(mm[1], +1),
+                    commitlog.stat_val(mm[0], -1),
+                    commitlog.stat_val(mm[1], +1),
                 ]
                 for c, mm in st["agg"].items()
             }

@@ -460,68 +460,157 @@ def _commit_rebase_appends(
     )
 
 
+# Spark types whose parquet footer [min, max] IS Spark's own min()/max():
+# the physical stats order the values exactly as Spark does (signed ints,
+# unsigned-byte UTF-8 strings, days, false < true, signed unscaled
+# decimals). Floating point (NaN, -0.0), INT96 timestamps (no stats),
+# binary, nested and collated strings are answered by the aggregate pass.
+_FOOTER_EXACT = frozenset(
+    {"integer", "long", "short", "byte", "string", "date", "boolean"}
+)
+
+
+def _footer_bounds(md, field: dict, j: int, legacy_dates: bool):
+    """Exact (min, max) of column ``j`` folded over the row groups' raw
+    physical stats as Spark values — (None, None) when every value is
+    null — or None when the footer cannot answer exactly."""
+    import datetime as _dt
+
+    typ = field["type"]
+    if not isinstance(typ, str):
+        return None
+    if typ.startswith("decimal("):
+        scale = int(typ[:-1].split(",")[1])
+    elif typ not in _FOOTER_EXACT or (typ == "date" and legacy_dates):
+        return None
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(j).statistics
+        if st is None or not st.has_null_count:
+            return None
+        if st.null_count == rg.num_rows:
+            continue
+        if not st.has_min_max:  # e.g. parquet-mr drops stats over 4 KB
+            return None
+        a, b = st.min_raw, st.max_raw
+        if isinstance(a, bytes) and typ != "string":
+            # FIXED_LEN_BYTE_ARRAY decimal: big-endian two's complement
+            a, b = (int.from_bytes(x, "big", signed=True) for x in (a, b))
+        lo = a if lo is None or a < lo else lo
+        hi = b if hi is None or b > hi else hi
+    if lo is None:
+        return None, None
+    if typ == "string":
+        try:
+            return lo.decode(), hi.decode()
+        except UnicodeDecodeError:
+            return None
+    if typ == "date":
+        epoch = _dt.date(1970, 1, 1)
+        try:
+            return epoch + _dt.timedelta(lo), epoch + _dt.timedelta(hi)
+        except OverflowError:
+            return None
+    if typ.startswith("decimal("):
+        return decimal.Decimal(f"{lo}E-{scale}"), decimal.Decimal(f"{hi}E-{scale}")
+    return lo, hi
+
+
 def _file_stats(
     spark: SparkSession, files: list[str], stats_cols: list[str]
 ) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``stats_cols`` — ONE distributed pass over
-    the new files using the parquet reader's file-name column; the result
-    (|files| × |cols| tiny) is what the manifest stores for data skipping.
-    Nulls are excluded from min/max (a file of all-null values gets
-    [None, None] and is never skipped). The same pass records each file's
-    exact ROW COUNT under the reserved ``__rows`` key (Delta's numRecords
-    — what lets ``snapshot_detail`` report row totals with zero data
-    I/O); ``_stats_cols_of`` and the pruners ignore it."""
+    """Per-file [min, max] for ``stats_cols``, what the manifest stores
+    for data skipping, plus each file's exact ROW COUNT under the
+    reserved ``__rows`` key (Delta's numRecords — what lets
+    ``snapshot_detail`` report row totals with zero data I/O);
+    ``_stats_cols_of`` and the pruners ignore ``__rows``. Nulls are
+    excluded from min/max (a file of all-null values gets [None, None]
+    and is never skipped); a file of 0 rows gets no entry.
+
+    The writer already recorded all of it: row counts and per-row-group
+    min/max/null counts sit in each new file's parquet footer, so the
+    common commit reads footers only and runs no Spark job (Dremel's and
+    Jigsaw's column-chunk metadata as the skipping index). What a footer
+    cannot answer exactly — types outside ``_FOOTER_EXACT``, missing
+    min/max on a column that is not all null, files pyarrow cannot open
+    or Spark did not write — goes to ONE aggregate pass over exactly
+    those files and columns, read with the files' own recorded Spark
+    schema (no inference job)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(*files).withColumn("__file", F.input_file_name())
-    aggs = [F.count(F.lit(1)).alias("__nrows")]
-    for c in stats_cols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
-    rows = df.groupBy("__file").agg(*aggs).collect()
+    vals: dict[str, dict] = {}  # file -> {col | "__rows": value}
+    need: dict[str, list[str]] = {}  # file -> columns for the pass
+    fields_of: dict[str, dict] = {}
+    for f in files:
+        md, fields = commitlog.read_footer(f) or (None, None)
+        if md is not None and md.num_rows == 0:
+            continue
+        if fields is None:
+            need[f] = list(stats_cols)
+            continue
+        fields_of[f] = fields
+        legacy = b"org.apache.spark.legacyDateTime" in (md.metadata or {})
+        pos = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        got = vals[f] = {"__rows": int(md.num_rows)}
+        for c in stats_cols:
+            b = (
+                _footer_bounds(md, fields[c], pos[c], legacy)
+                if c in fields and c in pos
+                else None
+            )
+            if b is None:
+                need.setdefault(f, []).append(c)
+            else:
+                got[c] = list(b)
+    if need:
+        pass_files = list(need)
+        pass_cols = [c for c in stats_cols if any(c in cs for cs in need.values())]
+        # one write's files share one schema: read them with it (no
+        # schema-inference job); files without a readable footer infer
+        pass_fields = [
+            [fields_of[f].get(c) for c in pass_cols] if f in fields_of else None
+            for f in pass_files
+        ]
+        first = pass_fields[0]
+        if first is not None and None not in first and all(
+            pf == first for pf in pass_fields
+        ):
+            from pyspark.sql.types import StructType
 
-    def js(v, side):
-        # JSON-safe, order-preserving encoding: numbers stay numeric;
-        # dates/timestamps become ISO strings (which compare in the same
-        # order as the values, all skipping needs). Decimals must NOT be
-        # stringified — '9.5' > '10.5' lexicographically, so string stats
-        # would make skip_where a WRONG filter (ADVICE r6). They become
-        # floats WIDENED OUTWARD (min nudged down, max nudged up): a
-        # rounded-inward bound could prune a file whose true extremum
-        # matches; widening only ever costs reading one extra file.
-        if v is None or isinstance(v, (int, float, str, bool)):
-            return v
-        if isinstance(v, decimal.Decimal):
-            f = float(v)
-            return math.nextafter(f, -math.inf if side < 0 else math.inf)
-        return str(v)
-
+            schema = StructType.fromJson({"type": "struct", "fields": first})
+            df = spark.read.schema(schema).parquet(*pass_files)
+        else:
+            df = spark.read.parquet(*pass_files)
+        aggs = [F.count(F.lit(1)).alias("__nrows")]
+        for c in pass_cols:
+            aggs.append(F.min(c).alias(f"__min_{c}"))
+            aggs.append(F.max(c).alias(f"__max_{c}"))
+        rows = df.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
+        by_path = {commitlog.normpath(r["__file"]): r.asDict() for r in rows}
+        for f, cs in need.items():
+            d = by_path.get(commitlog.normpath(f))
+            if d is None:
+                continue  # 0 rows: no entry
+            got = vals.setdefault(f, {"__rows": int(d["__nrows"])})
+            for c in cs:
+                got[c] = [d[f"__min_{c}"], d[f"__max_{c}"]]
     out: dict[str, dict[str, list]] = {}
-    for r in rows:
-        d = r.asDict()
-        # input_file_name returns a URI; manifests store the same form the
-        # lister produced, so normalize both to the URI's path part
-        key = d["__file"]
-        out[key] = {
-            c: [js(d[f"__min_{c}"], -1), js(d[f"__max_{c}"], +1)] for c in stats_cols
-        }
-        out[key]["__rows"] = int(d["__nrows"])
-    # re-key to the manifest's file strings: Hadoop's Path.toString() spells
-    # the scheme "file:/x" while input_file_name() spells "file:///x" —
-    # normalize both to the bare path before matching
-    import re
-
-    def norm(p: str) -> str:
-        return re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
-    by_path = {norm(k): v for k, v in out.items()}
-    return {f: by_path[norm(f)] for f in files if norm(f) in by_path}
+    for f in files:
+        if f in vals:
+            got = vals[f]
+            out[f] = {
+                c: [commitlog.stat_val(lo, -1), commitlog.stat_val(hi, +1)]
+                for c in stats_cols
+                for lo, hi in [got[c]]
+            }
+            out[f]["__rows"] = got["__rows"]
+    return out
 
 
-def _normpath(p: str) -> str:
-    """Manifest paths vs scan paths spell schemes differently
-    ("file:/x" vs "file:///x") — compare on the bare path."""
-    return re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
+_normpath = commitlog.normpath
 
 
 def _rt_of(m: dict | None) -> dict | None:
@@ -531,19 +620,30 @@ def _rt_of(m: dict | None) -> dict | None:
 
 
 def _file_row_counts(spark: SparkSession, files: list[str]) -> dict[str, int]:
-    """Per-file PHYSICAL row counts (one distributed pass) — row-id
-    allocation needs parquet row counts (ids are positional: base +
-    ``_metadata.row_index``), so DV-hidden rows still count."""
+    """Per-file PHYSICAL row counts — row-id allocation needs parquet row
+    counts (ids are positional: base + ``_metadata.row_index``), so
+    DV-hidden rows still count. Read from the parquet footers; only files
+    pyarrow cannot open go to a count scan."""
     from pyspark.sql import functions as F
 
-    rows = (
-        spark.read.parquet(*files)
-        .groupBy(F.input_file_name().alias("__file"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()
-    )
-    by = {_normpath(r["__file"]): int(r["__n"]) for r in rows}
-    return {f: by.get(_normpath(f), 0) for f in files}
+    counts: dict[str, int] = {}
+    scan: list[str] = []
+    for f in files:
+        ft = commitlog.read_footer(f)
+        if ft is None:
+            scan.append(f)
+        else:
+            counts[f] = int(ft[0].num_rows)
+    if scan:
+        rows = (
+            spark.read.parquet(*scan)
+            .groupBy(F.input_file_name().alias("__file"))
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .collect()
+        )
+        by = {_normpath(r["__file"]): int(r["__n"]) for r in rows}
+        counts.update({f: by.get(_normpath(f), 0) for f in scan})
+    return {f: counts[f] for f in files}
 
 
 def _alloc_row_ids(
@@ -1460,9 +1560,9 @@ def _commit_append_once(
         [_phys(mapping[1], c) for c in stats_cols] if mapping and stats_cols
         else list(stats_cols or [])
     )
-    # identity columns always join the stats pass: the new high watermark
-    # is read off the staged files' max — no second scan, and the ids the
-    # manifest accounts for are EXACTLY the ids parquet holds (a separate
+    # identity columns always join the stats: the new high watermark is
+    # read off the staged files' footer max — no second scan, and the ids
+    # the manifest accounts for are EXACTLY the ids parquet holds (a separate
     # agg over the pre-write frame could disagree: mono-id is re-evaluated
     # per action).
     ident_phys = {
@@ -1688,13 +1788,9 @@ def commit_replace_where(
             spark, candidates, sig, dv_files, keep_meta=True, colmap=colmap
         ).filter(where)
         probe = matched_meta.groupBy("__p").agg(F.count(F.lit(1)).alias("n")).collect()
-        import re as _re
 
-        def _norm(p: str) -> str:
-            return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
-        hit = {_norm(r["__p"]) for r in probe}
-        touched = [f for f in candidates if _norm(f) in hit]
+        hit = {_normpath(r["__p"]) for r in probe}
+        touched = [f for f in candidates if _normpath(f) in hit]
     touched_set = set(touched)
     untouched = [f for f in files if f not in touched_set]
     rewrite_files: list[str] = []
@@ -2097,8 +2193,8 @@ def set_bloom_filter(
 ) -> int:
     """Declare per-file BLOOM FILTER indexing on ``cols`` (Delta's
     ``CREATE BLOOMFILTER INDEX`` parity): every later write-class commit
-    indexes its new files in the same pass that computes their skipping
-    stats, and ``read_snapshot(point_where=...)`` prunes on the result
+    indexes its new files in one scan over all bloom columns, and
+    ``read_snapshot(point_where=...)`` prunes on the result
     (see sources/bloom.py for the full design). The spec records PHYSICAL
     names so it survives renames. Like Delta, existing files are NOT
     indexed retroactively by default — they are always read until a
@@ -2542,7 +2638,7 @@ def _attach_blooms(
     new_stats: dict,
 ) -> dict:
     """When the table declares a bloom spec, index ``new_files`` (one
-    column-pruned pass beside the stats pass) and hang the sidecar
+    job over all bloom columns, ``bloom.file_blooms``) and hang the sidecar
     pointer on each covered file's stats entry under the reserved
     ``__bloom`` key — so coverage rides the segmented log's existing
     stats replay. Called by every JVM write path that lands data files;
@@ -3178,20 +3274,18 @@ def vacuum(
     # file:/x paths, the pure-Python DataSource writer records bare /x —
     # comparing them verbatim deleted LIVE DataSource-written files as
     # orphans (caught by test_maintain_backfills_datasource_written_files).
-    def _np(p: str) -> str:
-        return re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
 
     live: set[str] = set()
     resolved_keep: dict[int, dict] = {}
     for v, m in _iter_resolved(spark, table_dir, sorted(keep)):
         resolved_keep[v] = m
-        live.update(_np(f) for f in m["files"])
+        live.update(_normpath(f) for f in m["files"])
         # change files (CDF) of retained versions stay readable through
         # snapshot_change_feed; expiring a version expires its feed too,
         # exactly Delta's CDF-vs-VACUUM retention coupling. Deletion
         # vectors are part of a version's read path — same lifetime.
-        live.update(_np(f) for f in m.get("cdc_files", []))
-        live.update(_np(f) for f in m.get("dv_files", []))
+        live.update(_normpath(f) for f in m.get("cdc_files", []))
+        live.update(_normpath(f) for f in m.get("dv_files", []))
         # bloom sidecars referenced by any retained version stay live —
         # same lifetime rule as CDF/DV files
         for st in (m.get("stats") or {}).values():
@@ -3207,13 +3301,13 @@ def vacuum(
                 while it.hasNext():
                     f = it.next()
                     if str(f.getPath().getName()).endswith(".parquet"):
-                        p = _np(str(f.getPath().toString()))
+                        p = _normpath(str(f.getPath().toString()))
                         if p not in live:
                             would.append(p)
         if fs_b.exists(jbloom):
             for s in fs_b.listStatus(jbloom):
                 if str(s.getPath().getName()) not in live:
-                    would.append(_np(str(s.getPath().toString())))
+                    would.append(_normpath(str(s.getPath().toString())))
         return sorted(would)
     if fs_b.exists(jbloom):
         for s in fs_b.listStatus(jbloom):
@@ -3229,7 +3323,7 @@ def vacuum(
             while it.hasNext():
                 f = it.next()
                 if str(f.getPath().getName()).endswith(".parquet"):
-                    parquet.append((f, _np(str(f.getPath().toString()))))
+                    parquet.append((f, _normpath(str(f.getPath().toString()))))
             if not any(p in live for _, p in parquet):
                 # whole batch dir is dead (incl. orphans from crashed
                 # commits, whose _SUCCESS markers are junk too)
@@ -3659,8 +3753,6 @@ def drop_inert_dv_pointers(spark: SparkSession, table_dir: str) -> int | None:
     versions expire. Returns the committed version, or None when there is
     nothing to drop (no DVs, or some DV still masks a live file — those
     need a real ``reorg_snapshot`` PURGE, which rewrites data)."""
-    import re as _re
-
     versions = _list_versions(spark, table_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {table_dir}")
@@ -3670,17 +3762,14 @@ def drop_inert_dv_pointers(spark: SparkSession, table_dir: str) -> int | None:
     if not dv_files:
         return None
 
-    def _local(p: str) -> str:
-        return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
     dv_paths = {
-        _local(r["file_path"])
+        _normpath(r["file_path"])
         for r in spark.read.parquet(*dv_files)
         .select("file_path")
         .distinct()
         .collect()
     }
-    if dv_paths & {_local(f) for f in m["files"]}:
+    if dv_paths & {_normpath(f) for f in m["files"]}:
         return None  # some DV still masks a live file: purge territory
     manifest = {
         "version": base_v + 1,
@@ -3723,8 +3812,6 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
     directory-encoded, so footers are compared against the non-partition
     physical schema) plus one scan of the (tiny by contract) DV files.
     """
-    import re as _re
-
     versions = _list_versions(spark, table_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {table_dir}")
@@ -3743,25 +3830,22 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
         # orphaned physical column — purging it would destroy row ids
         cur_phys.add("_row_id")
 
-    def _local(p: str) -> str:
-        return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
     needs: list[str] = []
     if sig is not None:
         import pyarrow.parquet as _pq
 
         for f in files:
-            footer_cols = set(_pq.read_schema(_local(f)).names)
+            footer_cols = set(_pq.read_schema(_normpath(f)).names)
             if footer_cols - cur_phys:
                 needs.append(f)
     dv_paths: set[str] = set()
     if dv_files:
         dv_paths = {
-            _local(r["file_path"])
+            _normpath(r["file_path"])
             for r in spark.read.parquet(*dv_files).select("file_path").distinct().collect()
         }
         needs.extend(
-            f for f in files if _local(f) in dv_paths and f not in set(needs)
+            f for f in files if _normpath(f) in dv_paths and f not in set(needs)
         )
     if not needs:
         # nothing to rewrite — but a fully-inert pointer list (every DV
@@ -3814,7 +3898,7 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
         "schema": sig,
         "files_rewritten": len(needs),
     }
-    if dv_files and dv_paths & {_local(f) for f in keep}:
+    if dv_files and dv_paths & {_normpath(f) for f in keep}:
         manifest["dv_files"] = dv_files  # kept files still need theirs
     # (no kept file referenced -> every live DV materialized -> the
     # pointer list drops, so reads stop paying the inert anti-join)
@@ -4097,13 +4181,9 @@ def merge_snapshot(
             probe = (
                 probe_meta.groupBy("__p").agg(F.count(F.lit(1)).alias("n")).collect()
             )
-            import re as _re
 
-            def _norm(p: str) -> str:
-                return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
-            hit = {_norm(r["__p"]) for r in probe}
-            touched = touched + [f for f in rest if _norm(f) in hit]
+            hit = {_normpath(r["__p"]) for r in probe}
+            touched = touched + [f for f in rest if _normpath(f) in hit]
     untouched = [f for f in files if f not in set(touched)]
     if clause_mode:
         src_keys = updates.select(*keys).dropDuplicates(keys)
@@ -4459,13 +4539,9 @@ def delete_snapshot(
         )
 
     probe = matched_meta.groupBy("__p").agg(F.count(F.lit(1)).alias("n")).collect()
-    import re as _re
 
-    def _norm(p: str) -> str:
-        return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
-    hit = {_norm(r["__p"]) for r in probe}
-    touched = [f for f in candidates if _norm(f) in hit]
+    hit = {_normpath(r["__p"]) for r in probe}
+    touched = [f for f in candidates if _normpath(f) in hit]
     touched_set = set(touched)
     untouched = [f for f in files if f not in touched_set]  # original order
     if not touched:
@@ -4594,13 +4670,9 @@ def update_snapshot(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    import re as _re
 
-    def _norm(p: str) -> str:
-        return _re.sub(r"^[a-zA-Z0-9+.-]+:/+", "/", p)
-
-    hit = {_norm(r["__p"]) for r in probe}
-    touched = [f for f in candidates if _norm(f) in hit]
+    hit = {_normpath(r["__p"]) for r in probe}
+    touched = [f for f in candidates if _normpath(f) in hit]
     if not touched:
         return base_v
     untouched = [f for f in files if f not in set(touched)]

@@ -90,22 +90,32 @@ def test_build_then_query_serves_without_training(spark, tmp_path):
 def test_failed_metadata_commit_leaves_no_codes(spark, tmp_path, monkeypatch):
     """``codes`` commits only after both metadata tables committed: when
     the pq_codebooks commit fails, the build raises and ``codes`` has no
-    committed version, so serve and maintain never see a half index."""
+    committed version, so serve and maintain never see a half index. A
+    retry into the same ``index_dir`` then REPLACES the metadata tables:
+    exactly K centroid rows, not the failed attempt's K plus the retry's."""
     from customer_activity_lakehouse_spark.sources import snapshots
 
-    real_commit = snapshots.commit_append
+    real_commit = snapshots.commit_overwrite
 
     def failing_commit(spark_, table_dir, *args, **kwargs):
         if table_dir.endswith("/pq_codebooks"):
             raise OSError("injected pq_codebooks commit failure")
         return real_commit(spark_, table_dir, *args, **kwargs)
 
-    monkeypatch.setattr(snapshots, "commit_append", failing_commit)
+    monkeypatch.setattr(snapshots, "commit_overwrite", failing_commit)
     idx = str(tmp_path / "idx")
+    corpus = _corpus(spark, 0, 60)
     with pytest.raises(OSError, match="injected"):
-        build_ann_index(spark, _corpus(spark, 0, 60), idx)
+        build_ann_index(spark, corpus, idx, cells=8)
     assert _list_versions(spark, f"{idx}/codes") == []
     assert _list_versions(spark, f"{idx}/pq_codebooks") == []
+    assert read_snapshot(spark, f"{idx}/ivf_centroids").count() == 8
+    monkeypatch.undo()
+    build_ann_index(spark, corpus, idx, cells=8)
+    cents = read_snapshot(spark, f"{idx}/ivf_centroids")
+    assert cents.count() == 8
+    assert cents.select("cluster").distinct().count() == 8
+    assert read_snapshot(spark, f"{idx}/codes").count() == 60
 
 
 def test_maintain_encodes_only_new_vectors_with_frozen_books(spark, tmp_path):

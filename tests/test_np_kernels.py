@@ -19,6 +19,9 @@ as the reference twins (production no longer carries them):
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -196,6 +199,45 @@ def test_km_assign_kernel_matches_expression(spark):
                 for r in _km_assign(embq, _centroid_rows(c)).collect()
             )
             assert got == want  # exact doubles, exact tie-breaks
+
+
+def _left_fold_sq_dists(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """The JVM ``aggregate(zip_with(...), 0.0, acc + v)`` distance, one
+    Python float op at a time: acc starts at 0.0 and adds each squared
+    difference in dimension order."""
+    out = np.empty((len(x), len(cents)))
+    for i, row in enumerate(x.tolist()):
+        for j, c in enumerate(cents.tolist()):
+            acc = 0.0
+            for a, b in zip(row, c):
+                acc += (a - b) * (a - b)
+            out[i, j] = acc
+    return out
+
+
+def test_distance_fold_order_on_non_integer_inputs():
+    """The integer-quantized corpus above makes every distance sum exact
+    in any order, so it cannot see a change of fold order. Non-integer
+    doubles can: a pairwise ``np.sum`` (or BLAS) distance differs from the
+    sequential fold in the last bits here, and must fail this pin."""
+    from customer_activity_lakehouse_spark.plans.vector_kernels import (
+        argmin_sq,
+        seq_sum,
+        sq_dists,
+    )
+
+    rng = np.random.default_rng(20261019)
+    x = rng.standard_normal((120, 64)) * 3.7
+    cents = rng.standard_normal((19, 64)) * 3.7
+    want = _left_fold_sq_dists(x, cents)
+    # the corpus is order-sensitive: a pairwise sum does move bits here
+    assert not np.array_equal(((x[:, None, :] - cents[None]) ** 2).sum(-1), want)
+    assert np.array_equal(sq_dists(x, cents), want)
+    idx, dist = argmin_sq(x, cents)
+    assert np.array_equal(idx, np.argmin(want, axis=1))
+    assert np.array_equal(dist, want[np.arange(len(x)), idx])
+    folds = [functools.reduce(operator.add, r) for r in x.tolist()]
+    assert np.array_equal(seq_sum(x), np.array(folds))
 
 
 def test_pq_assign_kernel_matches_expression(spark):
