@@ -222,6 +222,37 @@ def probe_positions(
     return [[int(x) for x in ps] for ps in row["p"]]
 
 
+def probe_positions_widened(
+    spark: SparkSession,
+    values: list,
+    typ: str | None,
+    was: list[str],
+    m: int,
+    k: int,
+) -> list[list[int]]:
+    """:func:`probe_positions` under the column's type and under every
+    type ``was`` it was widened from: files indexed before the widening
+    hashed their values as the narrower type, and xxhash64 of int and
+    bigint differ. A file may hold the value if ANY returned probe hits.
+    Values the narrower type cannot hold are not probed under it — no
+    file written with that type can contain them."""
+    probes = probe_positions(spark, values, typ, m, k)
+    for old in was:
+        local = _local_hasher(old) or (lambda v: v)
+        fit = []
+        for v in values:
+            try:
+                local(v)
+            except OverflowError:
+                continue  # outside the narrower type's range
+            except (ValueError, TypeError):
+                pass  # probe_positions lets the JVM cast decide
+            fit.append(v)
+        if fit:
+            probes += probe_positions(spark, fit, old, m, k)
+    return probes
+
+
 # -- pure-Python XXH64 (Spark's XxHash64 expression, driver-local) ----------
 #
 # Public algorithm (Collet's xxHash, the same one Spark vendors). Spark

@@ -106,15 +106,12 @@ def _rollback_copy(spark: SparkSession, table_dir: str, version: int) -> int:
             "copy_rollback_of": version,
             "files": [f for f in prev_m["files"] if f not in added],
             "schema": prev_m.get("schema"),
+            "stats": {
+                f: st for f, st in (prev_m.get("stats") or {}).items()
+                if f not in added
+            },
         }
-        if prev_m.get("stats"):
-            manifest["stats"] = {
-                f: st for f, st in prev_m["stats"].items() if f not in added
-            }
-        if prev_m.get("dv_files"):
-            manifest["dv_files"] = prev_m["dv_files"]
-        S._carry_props(prev_m, manifest)
-        S._carry_mapping(prev_m, manifest)
+        S._carry_table(prev_m, manifest)
         if S._try_commit(spark, table_dir, latest + 1, manifest, prev=prev_m):
             return latest + 1
     raise RuntimeError(

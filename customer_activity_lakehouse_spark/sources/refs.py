@@ -51,16 +51,17 @@ from pyspark.sql import functions as F
 
 from . import commitlog
 from .snapshots import (
-    _carry_mapping,
-    _carry_props,
+    _carry_table,
+    _claim,
+    _commit_meta,
     _commit_rebase_appends,
     _data_files,
+    _latest,
     _list_versions,
     _mapping_of,
     _read_commit,
     _read_manifest,
     _read_with_dvs,
-    _try_commit,
     _validate_constraints,
     _write_data,
     read_snapshot,
@@ -70,18 +71,12 @@ from .tables import _hadoop_fs, _path_exists
 _BRANCH_DIR = "_branches"
 _MARKER = "_branch.json"
 _NAME_RE = re.compile(r"^[A-Za-z0-9_][A-Za-z0-9_.-]*$")
-_SCHEME_RE = re.compile(r"^[a-zA-Z0-9+.-]+:/+")
 
 # Ops a publish may fast-forward over unconditionally: refs-only metadata
 # commits (tagging the parent during audit is the NORMAL WAP flow).  Pure
 # appends rebase under the WriteSerializable rule (see publish_branch);
 # anything else refuses rather than silently dropping it.
 _FF_SAFE_OPS = frozenset({"set_tag", "drop_tag"})
-
-
-def _norm(p: str) -> str:
-    """Scheme-normalized path (file:/x vs /x — same rule as vacuum)."""
-    return _SCHEME_RE.sub("/", p)
 
 
 def _check_name(name: str, ctx: str) -> None:
@@ -96,47 +91,19 @@ def tags_of(manifest: dict | None) -> dict[str, int]:
     return dict(((manifest or {}).get("refs") or {}).get("tags") or {})
 
 
-def _head_manifest(spark: SparkSession, table_dir: str) -> tuple[int, dict]:
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    return versions[-1], _read_manifest(spark, table_dir, versions[-1])
-
-
 def _refs_commit(
     spark: SparkSession, table_dir: str, op: str, tags: dict[str, int]
 ) -> int:
-    """One data_change=false commit that replaces the tag map — the
-    set_check_constraint template: explicit manifest from table-level
-    state, never a copy of the previous record (copying would leak
-    per-commit keys like cdc_files)."""
-    head_v, m = _head_manifest(spark, table_dir)
-    manifest = {
-        "version": head_v + 1,
-        "op": op,
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
+    """One data_change=false commit that replaces the tag map."""
+    head_v, m = _latest(spark, table_dir)
     refs = dict(m.get("refs") or {})
     if tags:
         refs["tags"] = tags
     else:
         refs.pop("tags", None)
-    if refs:
-        manifest["refs"] = refs
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest, exclude=("refs",))  # refs set above win
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, head_v + 1, manifest):
-        raise RuntimeError(
-            f"{op}: version {head_v + 1} was committed concurrently at "
-            f"{table_dir}; re-read and retry"
-        )
-    return head_v + 1
+    return _commit_meta(
+        spark, table_dir, head_v, m, op, {"refs": refs or None}, exclude=("refs",)
+    )
 
 
 def set_tag(
@@ -167,7 +134,7 @@ def set_tag(
 
 def drop_tag(spark: SparkSession, table_dir: str, name: str) -> int:
     """Remove tag ``name`` (its version becomes vacuum-expirable again)."""
-    head_v, m = _head_manifest(spark, table_dir)
+    head_v, m = _latest(spark, table_dir)
     tags = tags_of(m)
     if name not in tags:
         raise KeyError(f"drop_tag: no tag {name!r} at {table_dir} (have {sorted(tags)})")
@@ -178,7 +145,7 @@ def drop_tag(spark: SparkSession, table_dir: str, name: str) -> int:
 def tag_version(spark: SparkSession, table_dir: str, name: str) -> int:
     """Resolve tag ``name`` to its version (for ``read_snapshot(version=…)``
     and the SQL layer's ``TAG AS OF``)."""
-    _, m = _head_manifest(spark, table_dir)
+    _, m = _latest(spark, table_dir)
     tags = tags_of(m)
     if name not in tags:
         raise KeyError(
@@ -455,17 +422,18 @@ def publish_branch(
         )
     head_m = _read_manifest(spark, table_dir, head_v)
 
-    bnorm = _norm(bdir).rstrip("/") + "/"
+    norm = commitlog.normpath
+    bnorm = norm(bdir).rstrip("/") + "/"
 
     def _owned(f: str) -> bool:
-        return _norm(f).startswith(bnorm)
+        return norm(f).startswith(bnorm)
 
     pub = f"publish-{name}-{uuid.uuid4().hex[:12]}"
     remap: dict[str, str] = {}
     for f in bm["files"]:
         if not _owned(f):
             continue
-        sub = _norm(f)[len(bnorm):]
+        sub = norm(f)[len(bnorm):]
         if sub.startswith("data/"):
             sub = sub[len("data/"):]
         dst = f"{table_dir}/data/{pub}/{sub}"
@@ -482,19 +450,18 @@ def publish_branch(
         dv = spark.read.parquet(*dv_owned)
         if remap:
             scan_forms = {
-                _norm(r[0]): r[0]
+                norm(r[0]): r[0]
                 for r in spark.read.parquet(*remap.values())
                 .select(F.col("_metadata.file_path"))
                 .distinct()
                 .collect()
             }
-            pairs = [
-                (_norm(old), scan_forms[_norm(new)]) for old, new in remap.items()
-            ]
+            pairs = [(norm(old), scan_forms[norm(new)]) for old, new in remap.items()]
             mf = spark.createDataFrame(pairs, "__old string, __new string")
             dv = (
                 dv.withColumn(
-                    "__old", F.regexp_replace("file_path", _SCHEME_RE.pattern, "/")
+                    "__old",
+                    F.regexp_replace("file_path", commitlog._SCHEME.pattern, "/"),
                 )
                 .join(F.broadcast(mf), "__old", "left")
                 .select(
@@ -554,8 +521,9 @@ def publish_branch(
         manifest["stats"] = new_stats
     if dv_final:
         manifest["dv_files"] = dv_final
-    _carry_props(bm, manifest, exclude=("refs", "row_tracking", "txns"))
-    _carry_mapping(bm, manifest)
+    _carry_table(
+        bm, manifest, exclude=("stats", "dv_files", "refs", "row_tracking", "txns")
+    )
     if head_m.get("refs"):
         # the PARENT's refs are authoritative — tags created during the
         # audit window survive the publish
@@ -637,12 +605,7 @@ def publish_branch(
             "publish_branch", debris="published copies",
         )
     else:
-        if not _try_commit(spark, table_dir, head_v + 1, manifest):
-            raise RuntimeError(
-                f"publish_branch: version {head_v + 1} was committed "
-                f"concurrently at {table_dir}; re-read and retry"
-            )
-        new_v = head_v + 1
+        new_v = _claim(spark, table_dir, manifest, "publish_branch")
     if drop:
         _rm_tree(spark, bdir)
     return new_v

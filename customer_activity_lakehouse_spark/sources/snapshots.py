@@ -18,6 +18,15 @@ runtime jars (environment-blocked — README "Table formats"):
   list, so half-written data from a crashed commit is invisible (debris
   removed by ``vacuum``).
 
+Commit primitives: the verbs share three, so the log rule lives in one
+place. ``_latest`` reads the head version and its manifest (no snapshots
+raise). ``_commit_meta`` writes a metadata-only commit: it carries files,
+stats, deletion vectors, every table property and the column mapping
+unless the verb sets or excludes them, and aborts on a lost version slot.
+``_commit_rewrite`` ends every data-rewriting verb: fresh stats and blooms
+for the new files, kept files' stats verbatim, carried properties, row-id
+allocation, then a commit that rebases over pure appends (or aborts).
+
 Scale notes: a manifest holds one line per file — at 100 TB keep file
 counts bounded with :func:`compact_snapshot` (OPTIMIZE as a
 data_change=false replace commit) before this becomes the metadata
@@ -809,6 +818,166 @@ def _carry_mapping(src_m: dict | None, manifest: dict) -> dict:
     return manifest
 
 
+_TABLE_PROPS = (
+    "constraints", "table_stats", "generated", "partition_by", "bloom", "identity",
+    "unique_keys", "row_tracking", "clustering", "refs", "txns",
+)
+
+
+def _carry_props(
+    prev_m: dict | None, manifest: dict, exclude: tuple = ()
+) -> dict:
+    """Table PROPERTIES travel with every commit: unlike files/stats
+    (which each commit recomputes for its own file list), properties like
+    CHECK constraints — and ANALYZE's table_stats, which record their own
+    version so staleness is visible — are table-level state that would
+    silently vanish if any commit built its manifest without them.
+
+    ``exclude`` names properties the CALLER owns this commit (a drop
+    commit must not setdefault the just-dropped value back in when the
+    drop empties it) — everything else still carries: hand-picked carry
+    lists at those sites silently dropped ``partition_by`` when it joined
+    the property set, exactly the bug class this parameter removes."""
+    for key in _TABLE_PROPS:
+        if key in exclude:
+            continue
+        if prev_m and prev_m.get(key):
+            manifest.setdefault(key, prev_m[key])
+    return manifest
+
+
+def _carry_table(m: dict | None, manifest: dict, exclude: tuple = ()) -> dict:
+    """Carry ``m``'s table state into ``manifest`` wherever the verb did
+    not set it: per-file ``stats`` and ``dv_files``, every table property
+    and the column mapping. ``exclude`` names what the verb owns outright
+    (``stats``/``dv_files`` included); an empty stats map or DV list is
+    left out of the manifest, so a verb sets ``{}`` to drop them."""
+    for k in ("stats", "dv_files"):
+        if k not in exclude and (m or {}).get(k):
+            manifest.setdefault(k, m[k])
+        if not manifest.get(k):
+            manifest.pop(k, None)
+    _carry_props(m, manifest, exclude)
+    return _carry_mapping(m, manifest)
+
+
+def _latest(spark: SparkSession, table_dir: str) -> tuple[int, dict]:
+    """(head version, its resolved manifest): the read every verb commits
+    on top of. A table with no snapshots raises FileNotFoundError."""
+    versions = _list_versions(spark, table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no snapshots at {table_dir}")
+    return versions[-1], _read_manifest(spark, table_dir, versions[-1])
+
+
+def _claim(
+    spark: SparkSession, table_dir: str, manifest: dict, op: str, debris=None
+) -> int:
+    """Claim ``manifest``'s version slot or abort: a commit built from
+    what it read must not land on a commit it never saw (the caller
+    re-reads the table and retries the verb)."""
+    v = manifest["version"]
+    if not _try_commit(spark, table_dir, v, manifest):
+        left = f" ({debris} left as vacuum debris)" if debris else ""
+        raise RuntimeError(
+            f"{op}: version {v} was committed concurrently at {table_dir}; "
+            f"re-read and retry{left}"
+        )
+    return v
+
+
+def _commit_meta(
+    spark: SparkSession,
+    table_dir: str,
+    base_v: int,
+    m: dict,
+    op: str,
+    edit: dict | None = None,
+    exclude: tuple = (),
+    data_change: bool = False,
+    rebase: bool = False,
+) -> int:
+    """The metadata-only commit on top of ``m`` (version ``base_v``):
+    ``m``'s files and schema plus the verb's own ``edit`` keys (a None
+    value is left out; ``files`` or ``schema`` may be replaced), and
+    everything else carried by :func:`_carry_table`. The manifest is
+    built from table-level state, never copied from the previous record
+    (a copy would leak per-commit keys such as ``cdc_files``). A lost
+    slot aborts (:func:`_claim`); ``rebase=True`` rebases over pure
+    appends instead (:func:`_commit_rebase_appends`)."""
+    manifest = {
+        "version": base_v + 1,
+        "op": op,
+        "data_change": data_change,
+        "files": m["files"],
+        "schema": m.get("schema"),
+    }
+    manifest.update((k, v) for k, v in (edit or {}).items() if v is not None)
+    _carry_table(m, manifest, exclude)
+    if rebase:
+        return _commit_rebase_appends(spark, table_dir, base_v + 1, manifest, op)
+    return _claim(spark, table_dir, manifest, op)
+
+
+def _index_new_files(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict | None,
+    files: list[str],
+    stats_cols: list[str] | None,
+    colmap: dict | None,
+    keys=(),
+) -> dict:
+    """Per-file state for the data files a commit adds: footer [min, max]
+    and row counts (:func:`_file_stats`) over the logical ``stats_cols``
+    mapped through ``colmap`` plus the physical ``keys``, and bloom
+    sidecars when ``m`` declares a spec (:func:`_attach_blooms`)."""
+    cols = sorted({_phys(colmap, c) for c in stats_cols or []} | set(keys))
+    new_stats = _file_stats(spark, files, cols) if cols and files else {}
+    return _attach_blooms(spark, table_dir, m, files, new_stats)
+
+
+def _commit_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    manifest: dict,
+    new_files: list[str],
+    kept: list[str],
+    op: str,
+    stats_cols: list[str] | None = None,
+    cluster_cols=(),
+    materialized: bool = False,
+    debris: str = "rewrite dir",
+    rebase: bool = True,
+) -> int:
+    """The tail of every verb that writes data files over ``m``.
+    ``manifest`` holds the verb's own keys (version, op, files, schema,
+    ``dv_files``, …). Stats: ``kept`` files keep their recorded entries;
+    ``new_files`` get fresh ones over ``stats_cols`` (default: the
+    columns the table already tracks) plus the partition and
+    ``cluster_cols`` keys. Then table properties and mapping carry, row
+    ids are allocated (``materialized``: see :func:`_alloc_row_ids`), and
+    the commit rebases over pure appends — or, with ``rebase=False``,
+    aborts on any lost slot."""
+    colmap, _ = _mapping_of(m)
+    keys = set(_part_keys(m)) | {_phys(colmap, c) for c in cluster_cols}
+    if stats_cols is None:
+        keys |= set(_stats_cols_of(m))
+    kept = set(kept)
+    manifest["stats"] = {
+        **{f: s for f, s in m.get("stats", {}).items() if f in kept},
+        **_index_new_files(spark, table_dir, m, new_files, stats_cols, colmap, keys),
+    }
+    _carry_table(m, manifest, exclude=("stats", "dv_files"))
+    _alloc_row_ids(spark, m, manifest, new_files, materialized)
+    if not rebase:
+        return _claim(spark, table_dir, manifest, op, debris)
+    return _commit_rebase_appends(
+        spark, table_dir, manifest["version"], manifest, op, debris
+    )
+
+
 def rename_snapshot_column(
     spark: SparkSession, table_dir: str, old: str, new: str
 ) -> int:
@@ -824,11 +993,7 @@ def rename_snapshot_column(
     Beyond-reference extension: the reference renames columns by
     rewriting whole zones (data_processing.py:150's projections); on a
     100 TB table that is days of I/O for a name change."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema")
     if sig is None:
         raise ValueError(f"rename_snapshot_column: no recorded schema at {table_dir}")
@@ -842,11 +1007,7 @@ def rename_snapshot_column(
     if colmap is None:
         colmap, used = {n: n for n in names}, list(names)
     colmap[new] = colmap.pop(old)
-    manifest = {
-        "version": base_v + 1,
-        "op": "rename_column",
-        "data_change": False,
-        "files": m["files"],
+    edit = {
         "schema": [[new if n == old else n, t] for n, t in sig],
         "colmap": colmap,
         "colmap_used": used,
@@ -855,40 +1016,29 @@ def rename_snapshot_column(
     if old in (m.get("partition_by") or []):
         # partitioning follows the LOGICAL name; the physical name (and
         # with it the layout and the stats keys) is untouched
-        manifest["partition_by"] = [
-            new if c == old else c for c in m["partition_by"]
-        ]
+        edit["partition_by"] = [new if c == old else c for c in m["partition_by"]]
     if old in (m.get("identity") or {}):
         # the allocation rule follows the rename (identity specs are keyed
         # by logical name; a stale key would silently stop allocation)
         ident = dict(m["identity"])
         ident[new] = ident.pop(old)
-        manifest["identity"] = ident
+        edit["identity"] = ident
     uniq = m.get("unique_keys") or {}
     if any(old in cols for cols in uniq.values()):
         # enforcement follows the rename too — a stale column list would
         # fail every later append inside _validate_unique_batch's groupBy
         # (unresolved column), bricking the append path until drop_unique_key
-        manifest["unique_keys"] = {
+        edit["unique_keys"] = {
             k: [new if c == old else c for c in cols] for k, cols in uniq.items()
         }
     clus = m.get("clustering")
     if clus and old in clus.get("cols", []):
         # layout keys follow the rename (a stale key would fail the next
         # liquid compaction's repartitionByRange on an unresolved column)
-        manifest["clustering"] = {
+        edit["clustering"] = {
             **clus, "cols": [new if c == old else c for c in clus["cols"]]
         }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"rename_snapshot_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(spark, table_dir, base_v, m, "rename_column", edit)
 
 
 def drop_snapshot_column(spark: SparkSession, table_dir: str, name: str) -> int:
@@ -897,11 +1047,7 @@ def drop_snapshot_column(spark: SparkSession, table_dir: str, name: str) -> int:
     the files (invisible to every read, reclaimed physically by the next
     rewrite of each file), and its physical name is retired forever in
     ``colmap_used``. Refused while a CHECK constraint references it."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema")
     if sig is None:
         raise ValueError(f"drop_snapshot_column: no recorded schema at {table_dir}")
@@ -944,27 +1090,14 @@ def drop_snapshot_column(spark: SparkSession, table_dir: str, name: str) -> int:
         f: {c: mm for c, mm in st.items() if c != phys}
         for f, st in m.get("stats", {}).items()
     }
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_column",
-        "data_change": False,
-        "files": m["files"],
+    edit = {
         "schema": [[n, t] for n, t in sig if n != name],
         "colmap": colmap,
         "colmap_used": used,
         "dropped": name,
+        "stats": stats if any(stats.values()) else {},
     }
-    if any(st for st in stats.values()):
-        manifest["stats"] = stats
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_snapshot_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(spark, table_dir, base_v, m, "drop_column", edit)
 
 
 _WIDENINGS = {
@@ -987,12 +1120,11 @@ def widen_snapshot_column(
     else raises. Future appends must already carry the widened type (the
     ordinary drift gate enforces it). Recorded [min,max] stats stay valid
     — JSON integers don't change representation when the column widens.
+    Bloom sidecars stay valid too: a bloom-indexed column's spec records
+    the types it was widened from (``widened``), and point lookups probe
+    under each, since files indexed earlier hashed the narrower type.
     Version races abort."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema")
     if sig is None:
         raise ValueError(f"widen_snapshot_column: no recorded schema at {table_dir}")
@@ -1007,25 +1139,17 @@ def widen_snapshot_column(
             f"widen_snapshot_column: {cur} -> {new_type} is not a lossless "
             f"widening (allowed from {cur}: {sorted(_WIDENINGS.get(cur, []))})"
         )
-    manifest = {
-        "version": base_v + 1,
-        "op": "widen_column",
-        "data_change": False,
-        "files": m["files"],
+    edit = {
         "schema": [[n, new_type if n == col else t] for n, t in sig],
         "widened": [col, cur, new_type],
     }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"widen_snapshot_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    spec = m.get("bloom")
+    pc = _phys(_mapping_of(m)[0], col)
+    if spec and pc in spec["cols"]:
+        was = dict(spec.get("widened") or {})
+        was[pc] = [*was.get(pc, []), cur]
+        edit["bloom"] = {**spec, "widened": was}
+    return _commit_meta(spark, table_dir, base_v, m, "widen_column", edit)
 
 
 def _check_constraint_refs(m: dict, col: str, ctx: str) -> None:
@@ -1282,12 +1406,6 @@ def _commit_append_files(
             manifest["colmap_used"] = mapping[2]
         if prev_cons:
             manifest["constraints"] = prev_cons
-        if versions and prev_m.get("table_stats"):
-            manifest["table_stats"] = prev_m["table_stats"]
-        if versions and prev_m.get("generated"):
-            manifest["generated"] = prev_m["generated"]
-        if versions and prev_m.get("bloom"):
-            manifest["bloom"] = prev_m["bloom"]
         if identity_update is not None:
             manifest["identity"] = identity_update
         if prev_uniq:
@@ -1310,10 +1428,8 @@ def _commit_append_files(
             manifest["txns"] = {
                 **prev_txns, txn[0]: [version, int(txn[1])]
             }
-        # belt-and-braces: any table property the hand-built section above
-        # didn't own still carries (setdefault — explicit sets win). The
-        # hand-picked list silently dropped `clustering` when it joined
-        # the property set — the exact bug class _carry_props removes.
+        # every table property the section above didn't set carries
+        # (setdefault — explicit sets win)
         _carry_props(prev_m if versions else None, manifest)
         # row tracking: allocate bases for this batch from the manifest
         # read THIS attempt — losing the slot re-enters the loop and
@@ -1543,12 +1659,10 @@ def _commit_append_once(
     # two appenders racing the same attempt number (threads in one driver,
     # or a retried crashed commit) must never collide at the parquet write
     # — the manifest rename is the only arbitration point
-    staged = _to_physical(df, mapping[1]) if mapping else df
-    part_phys = [
-        _phys(mapping[1] if mapping else None, c) for c in (partition_by or [])
-    ]
+    colmap = mapping[1] if mapping else None
+    part_phys = [_phys(colmap, c) for c in (partition_by or [])]
     data_path = _write_data(
-        staged, table_dir, f"v{attempt:05d}-{uuid.uuid4().hex[:12]}",
+        _to_physical(df, colmap), table_dir, f"v{attempt:05d}-{uuid.uuid4().hex[:12]}",
         partition_by=part_phys or None,
     )
     new_files = _data_files(spark, data_path)
@@ -1556,20 +1670,16 @@ def _commit_append_once(
     # renames). Partition columns ALWAYS join the stats set: each file is
     # value-pure (hive layout), so its [min, max] is exact and every
     # partition predicate prunes through the ordinary stats machinery.
-    stat_keys = (
-        [_phys(mapping[1], c) for c in stats_cols] if mapping and stats_cols
-        else list(stats_cols or [])
+    # Identity columns join too: the new high watermark is read off the
+    # staged files' footer max — no second scan, and the ids the manifest
+    # accounts for are EXACTLY the ids parquet holds (a separate agg over
+    # the pre-write frame could disagree: mono-id is re-evaluated per
+    # action).
+    ident_phys = {n: _phys(colmap, n) for n in ident}
+    new_stats = _index_new_files(
+        spark, table_dir, prev_m if versions else None, new_files, stats_cols,
+        colmap, set(part_phys) | set(ident_phys.values()),
     )
-    # identity columns always join the stats: the new high watermark is
-    # read off the staged files' footer max — no second scan, and the ids
-    # the manifest accounts for are EXACTLY the ids parquet holds (a separate
-    # agg over the pre-write frame could disagree: mono-id is re-evaluated
-    # per action).
-    ident_phys = {
-        n: _phys(mapping[1] if mapping else None, n) for n in ident
-    }
-    stat_keys = sorted(set(stat_keys) | set(part_phys) | set(ident_phys.values()))
-    new_stats = _file_stats(spark, new_files, stat_keys) if stat_keys else {}
     if identity_new is not None:
         for n, ph in ident_phys.items():
             observed = [
@@ -1579,9 +1689,6 @@ def _commit_append_once(
             ]
             hi = max([identity_base[n], *[int(v) for v in observed]])
             identity_new[n] = {**ident[n], "high": int(hi)}
-    new_stats = _attach_blooms(
-        spark, table_dir, prev_m if versions else None, new_files, new_stats
-    )
     return _commit_append_files(
         spark,
         table_dir,
@@ -1687,9 +1794,10 @@ def commit_overwrite(
                 f"IDENTITY at {table_dir}; overwrites cannot supply it "
                 "(declare mode='default' to allow explicit values)"
             )
-    stat_keys = sorted(set(stats_cols or []) | set(partition_by or []) | set(ident))
-    new_stats = _file_stats(spark, files, stat_keys) if stat_keys else {}
-    new_stats = _attach_blooms(spark, table_dir, prev_m, files, new_stats)
+    new_stats = _index_new_files(
+        spark, table_dir, prev_m, files, stats_cols, None,
+        set(partition_by or []) | set(ident),
+    )
     if ident:
         # watermark only moves up: old versions' ids stay reserved so a
         # post-overwrite append can never re-mint a historical id
@@ -1708,12 +1816,7 @@ def commit_overwrite(
     # row tracking: an overwrite replaces every row — all ids are fresh
     # (Delta's non-preserving semantics); the watermark stays monotonic
     _alloc_row_ids(spark, prev_m, manifest, files)
-    if not _try_commit(spark, table_dir, version, manifest):
-        raise RuntimeError(
-            f"commit_overwrite: version {version} was committed concurrently at "
-            f"{table_dir}; re-read the table and retry the overwrite"
-        )
-    return version
+    return _claim(spark, table_dir, manifest, "commit_overwrite")
 
 
 def commit_replace_where(
@@ -1751,11 +1854,7 @@ def commit_replace_where(
     """
     from pyspark.sql import functions as F
 
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema")
     new_sig = _schema_sig(df)
     if sig is not None and sig != new_sig:
@@ -1827,15 +1926,6 @@ def commit_replace_where(
         f"v{base_v + 1:05d}-replace-cdc-{uuid.uuid4().hex[:12]}",
     )
     all_new = rewrite_files + new_files
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    new_stats = _file_stats(spark, all_new, cols) if cols and all_new else {}
-    new_stats = _attach_blooms(spark, table_dir, m, all_new, new_stats)
-    kept_stats = {f: s for f, s in stats.items() if f in set(untouched)}
     manifest = {
         "version": base_v + 1,
         "op": "replace_where",
@@ -1844,52 +1934,15 @@ def commit_replace_where(
         "replaced_where": where,
         "files_rewritten": len(touched),
         "cdc_files": _data_files(spark, cdc_path),
-    }
-    if dv_files:
         # rewritten files materialized their DVs; untouched keep theirs
-        manifest["dv_files"] = dv_files
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
+        "dv_files": dv_files,
+    }
     # row tracking: replaced-scope rows get fresh ids (non-preserving
-    # rewrite); untouched files keep theirs via kept_stats
-    _alloc_row_ids(spark, m, manifest, all_new)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"commit_replace_where: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry (rewrite dir left "
-            "as vacuum debris)"
-        )
-    return base_v + 1
-
-
-_TABLE_PROPS = (
-    "constraints", "table_stats", "generated", "partition_by", "bloom", "identity",
-    "unique_keys", "row_tracking", "clustering", "refs", "txns",
-)
-
-
-def _carry_props(
-    prev_m: dict | None, manifest: dict, exclude: tuple = ()
-) -> dict:
-    """Table PROPERTIES travel with every commit: unlike files/stats
-    (which each commit recomputes for its own file list), properties like
-    CHECK constraints — and ANALYZE's table_stats, which record their own
-    version so staleness is visible — are table-level state that would
-    silently vanish if any commit built its manifest without them.
-
-    ``exclude`` names properties the CALLER owns this commit (a drop
-    commit must not setdefault the just-dropped value back in when the
-    drop empties it) — everything else still carries: hand-picked carry
-    lists at those sites silently dropped ``partition_by`` when it joined
-    the property set, exactly the bug class this parameter removes."""
-    for key in _TABLE_PROPS:
-        if key in exclude:
-            continue
-        if prev_m and prev_m.get(key):
-            manifest.setdefault(key, prev_m[key])
-    return manifest
+    # rewrite); untouched files keep theirs with their stats
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, all_new, untouched, "commit_replace_where",
+        stats_cols, rebase=False,
+    )
 
 
 def _validate_constraints(df: DataFrame, constraints: dict[str, str], ctx: str) -> None:
@@ -1949,11 +2002,7 @@ def set_unique_key(
     validate only batch-internal uniqueness (an overwrite replaces the
     table, so that IS the full check); the streaming append sink and the
     pure-Python DataSource writer fail loudly on unique-key tables."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig_names = [n for n, _ in (m.get("schema") or [])]
     missing = [c for c in cols if c not in sig_names]
     if missing:
@@ -1966,58 +2015,23 @@ def set_unique_key(
         {name: list(cols)},
         "set_unique_key",
     )
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_unique_key",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "unique_keys": {**m.get("unique_keys", {}), name: list(cols)},
-    }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("unique_keys",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_unique_key: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    uniq = {**m.get("unique_keys", {}), name: list(cols)}
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_unique_key", {"unique_keys": uniq}
+    )
 
 
 def drop_unique_key(spark: SparkSession, table_dir: str, name: str = "uk") -> int:
     """Un-declare a unique key (data untouched; only enforcement stops)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     uniq = dict(m.get("unique_keys", {}))
     if name not in uniq:
         raise KeyError(f"no unique key {name!r} at {table_dir} (have {sorted(uniq)})")
     del uniq[name]
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_unique_key",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    if uniq:
-        manifest["unique_keys"] = uniq
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("unique_keys",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_unique_key: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_unique_key",
+        {"unique_keys": uniq or None}, exclude=("unique_keys",),
+    )
 
 
 def enable_row_tracking(spark: SparkSession, table_dir: str) -> int:
@@ -2048,11 +2062,7 @@ def enable_row_tracking(spark: SparkSession, table_dir: str) -> int:
 
     Requires a recorded schema (every DML-created table has one).
     Idempotent: enabling an enabled table returns the current version."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     if _rt_of(m):
         return base_v
     if not m.get("schema"):
@@ -2079,26 +2089,10 @@ def enable_row_tracking(spark: SparkSession, table_dir: str) -> int:
         n = int(counts.get(f, (stats.get(f) or {}).get("__rows", 0)))
         stats[f] = {**stats.get(f, {}), "__rows": n, "__base_row_id": nxt}
         nxt += n
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_row_tracking",
-        "data_change": False,
-        "files": files,
-        "schema": m.get("schema"),
-        "row_tracking": {"next": nxt},
-    }
-    if stats:
-        manifest["stats"] = stats
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"enable_row_tracking: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_row_tracking",
+        {"row_tracking": {"next": nxt}, "stats": stats},
+    )
 
 
 def set_check_constraint(
@@ -2112,75 +2106,29 @@ def set_check_constraint(
     rides the manifest so every writer sees it. The commit is
     data_change=false (no row changed) — invisible to incremental
     consumers. Version races abort."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     _validate_constraints(
         read_snapshot(spark, table_dir, version=base_v),
         {name: expr},
         "set_check_constraint",
     )
-    # build the manifest EXPLICITLY from table-level state — copying the
-    # previous manifest would leak its per-commit keys (cdc_files would
-    # make the change feed re-deliver the prior commit's rows here)
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_constraint",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "constraints": {**m.get("constraints", {}), name: expr},
-    }
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest)  # carries table_stats; constraints set above win
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_check_constraint: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    cons = {**m.get("constraints", {}), name: expr}
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_constraint", {"constraints": cons}
+    )
 
 
 def drop_check_constraint(spark: SparkSession, table_dir: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT parity (data_change=false commit)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     cons = dict(m.get("constraints", {}))
     if name not in cons:
         raise KeyError(f"no CHECK constraint {name!r} at {table_dir} (have {sorted(cons)})")
     del cons[name]
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_constraint",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    if cons:
-        manifest["constraints"] = cons
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    # constraints excluded: carrying them would setdefault the
-    # just-dropped set back in when this drop empties it
-    _carry_props(m, manifest, exclude=("constraints",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_check_constraint: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_constraint",
+        {"constraints": cons or None}, exclude=("constraints",),
+    )
 
 
 def set_bloom_filter(
@@ -2206,11 +2154,7 @@ def set_bloom_filter(
     if m_bits <= 0 or m_bits % 8 or k <= 0:
         raise ValueError("set_bloom_filter: m_bits must be a positive "
                          f"multiple of 8 and k positive (got {m_bits}, {k})")
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     colmap, _ = _mapping_of(m)
     known = {n for n, _ in m.get("schema") or []}
     missing = [c for c in cols if c not in known]
@@ -2220,14 +2164,15 @@ def set_bloom_filter(
             f"{sorted(known)}"
         )
     spec = {"cols": sorted(_phys(colmap, c) for c in cols), "m": m_bits, "k": k}
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_bloom",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "bloom": spec,
+    # files indexed under the previous spec keep their sidecars, so the
+    # types a still-indexed column was widened from stay probed
+    was = {
+        c: t
+        for c, t in ((m.get("bloom") or {}).get("widened") or {}).items()
+        if c in spec["cols"]
     }
+    if was:
+        spec["widened"] = was
     stats = dict(m.get("stats") or {})
     if backfill and m["files"]:
         blooms = _bl.file_blooms(spark, m["files"], spec["cols"], m_bits, k)
@@ -2235,18 +2180,10 @@ def set_bloom_filter(
             rel = _write_bloom_sidecar(spark, table_dir, blooms, spec)
             for f, _cols in blooms.items():
                 stats[f] = {**stats.get(f, {}), _bl.STATS_KEY: rel}
-    if stats:
-        manifest["stats"] = stats
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest, exclude=("bloom",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_bloom_filter: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_bloom",
+        {"bloom": spec, "stats": stats}, exclude=("bloom",),
+    )
 
 
 def fsck_snapshot(
@@ -2366,27 +2303,16 @@ def fsck_snapshot(
             s = {k: v for k, v in s.items() if k != "__bloom"}
         if s:
             new_stats[f] = s
-    manifest = {
-        "version": base_v + 1,
-        "op": "fsck",
-        "data_change": bool(missing),  # dropped rows ARE a data change
+    edit = {
         "files": kept,
-        "schema": m.get("schema"),
         "fsck_dropped": len(missing),
         "fsck_unbloomed": len(missing_bloom),
+        "stats": new_stats,
     }
-    if new_stats:
-        manifest["stats"] = new_stats
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"fsck_snapshot: version {base_v + 1} was committed concurrently "
-            f"at {table_dir}; re-read and retry"
-        )
-    out["repaired"] = base_v + 1
+    out["repaired"] = _commit_meta(
+        spark, table_dir, base_v, m, "fsck", edit,
+        data_change=bool(missing),  # dropped rows ARE a data change
+    )
     return out
 
 
@@ -2406,11 +2332,7 @@ def set_partition_spec(
     At 100 TB this is the difference between "repartition the table"
     being a metadata statement and being days of I/O (the reference
     re-lays whole zones to change layout, data_processing.py:218)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     known = {n for n, _ in m.get("schema") or []}
     missing = [c for c in cols if c not in known]
     if missing:
@@ -2418,26 +2340,10 @@ def set_partition_spec(
             f"set_partition_spec: column(s) {missing} not in the table "
             f"schema {sorted(known)}"
         )
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_partitioning",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    if cols:
-        manifest["partition_by"] = list(cols)
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("partition_by",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_partition_spec: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_partitioning",
+        {"partition_by": list(cols) or None}, exclude=("partition_by",),
+    )
 
 
 def set_cluster_columns(
@@ -2457,11 +2363,7 @@ def set_cluster_columns(
     Advisory layout state, not a protocol feature: readers need nothing,
     and a writer that ignores it only writes less-prunable files —
     correctness never depends on it. Metadata-only commit; races abort."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     known = {n for n, _ in m.get("schema") or []}
     missing = [c for c in cols if c not in known]
     if missing:
@@ -2471,55 +2373,22 @@ def set_cluster_columns(
         )
     if zorder and len(cols) < 2:
         raise ValueError("set_cluster_columns: zorder needs >= 2 columns")
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_clustering",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "clustering": {"cols": list(cols), "zorder": bool(zorder)},
-    }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("clustering",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_cluster_columns: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_clustering",
+        {"clustering": {"cols": list(cols), "zorder": bool(zorder)}},
+        exclude=("clustering",),
+    )
 
 
 def drop_cluster_columns(spark: SparkSession, table_dir: str) -> int:
     """``ALTER TABLE ... CLUSTER BY NONE``: stop clustering future
     rewrites (existing layout untouched)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     if not m.get("clustering"):
         raise KeyError(f"no clustering columns declared at {table_dir}")
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_clustering",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("clustering",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_cluster_columns: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_clustering", exclude=("clustering",)
+    )
 
 
 def backfill_bloom_filters(spark: SparkSession, table_dir: str) -> int | None:
@@ -2534,11 +2403,7 @@ def backfill_bloom_filters(spark: SparkSession, table_dir: str) -> int | None:
     already fully covered. Version races abort (rerun next tick)."""
     from . import bloom as _bl
 
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     spec = m.get("bloom")
     if not spec or not m["files"]:
         return None
@@ -2552,25 +2417,10 @@ def backfill_bloom_filters(spark: SparkSession, table_dir: str) -> int | None:
     rel = _write_bloom_sidecar(spark, table_dir, blooms, spec)
     for f in blooms:
         stats[f] = {**stats.get(f, {}), _bl.STATS_KEY: rel}
-    manifest = {
-        "version": base_v + 1,
-        "op": "bloom_backfill",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "stats": stats,
-        "bloom_backfilled": len(blooms),
-    }
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"backfill_bloom_filters: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "bloom_backfill",
+        {"stats": stats, "bloom_backfilled": len(blooms)},
+    )
 
 
 def drop_bloom_filter(spark: SparkSession, table_dir: str) -> int:
@@ -2579,37 +2429,18 @@ def drop_bloom_filter(spark: SparkSession, table_dir: str) -> int:
     orphaned sidecar bytes go with the next vacuum)."""
     from . import bloom as _bl
 
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     if not m.get("bloom"):
         raise KeyError(f"no bloom filter spec at {table_dir}")
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_bloom",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
     stats = {
         f: {c: v for c, v in st.items() if c != _bl.STATS_KEY}
         for f, st in (m.get("stats") or {}).items()
     }
     stats = {f: st for f, st in stats.items() if st}
-    if stats:
-        manifest["stats"] = stats
-    if m.get("dv_files"):
-        manifest["dv_files"] = m["dv_files"]
-    _carry_props(m, manifest, exclude=("bloom",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_bloom_filter: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_bloom", {"stats": stats},
+        exclude=("bloom",),
+    )
 
 
 def _write_bloom_sidecar(
@@ -2714,8 +2545,9 @@ def _prune_by_bloom(
         vals = [v for v in vals if v is not None]
         if not vals:
             continue
-        probes = _bl.probe_positions(
-            spark, list(vals), types.get(col), spec["m"], spec["k"]
+        probes = _bl.probe_positions_widened(
+            spark, list(vals), types.get(col),
+            (spec.get("widened") or {}).get(pc, []), spec["m"], spec["k"],
         )
         kept = []
         for f in files:
@@ -3116,19 +2948,16 @@ def clone_snapshot(
         "files": src["files"],
         "schema": src.get("schema"),
         "cloned_from": {"table": src_dir, "version": v},
-    }
-    if src.get("stats"):
         # carry the source's per-file skipping stats — a clone that drops
         # them silently disables skip_where at the clone (ADVICE r6)
-        manifest["stats"] = {f: s for f, s in src["stats"].items() if f in set(src["files"])}
-    if src.get("dv_files"):
-        # DVs are part of the cloned version's read path (dropping them
-        # would resurrect deleted rows at the clone)
-        manifest["dv_files"] = src["dv_files"]
-    # the clone inherits CHECK constraints — but NOT named refs: tags are
-    # version pointers into the SOURCE's history, and the clone's history
-    # restarts at v1 (a carried tag would resolve to the wrong manifest)
-    _carry_props(src, manifest, exclude=("refs", "txns"))
+        "stats": {f: s for f, s in (src.get("stats") or {}).items() if f in set(src["files"])},
+    }
+    # DVs (part of the cloned version's read path), CHECK constraints and
+    # the column mapping (it references the source's physical files) carry
+    # — but NOT named refs: tags are version pointers into the SOURCE's
+    # history, and the clone's history restarts at v1 (a carried tag would
+    # resolve to the wrong manifest)
+    _carry_table(src, manifest, exclude=("refs", "txns"))
     if src.get("txns"):
         # txn cursors carry (a WAP branch is the parent's continuation —
         # an idempotent writer must keep skipping batches the parent
@@ -3138,8 +2967,6 @@ def clone_snapshot(
         manifest["txns"] = {
             app: [1, int(cur[1])] for app, cur in src["txns"].items()
         }
-    _carry_mapping(src, manifest)  # … and the column mapping (it references
-    # the source's physical files, so it must read them the source's way)
     if not _try_commit(spark, dst_dir, 1, manifest):
         raise RuntimeError(f"clone destination committed concurrently: {dst_dir}")
     return 1
@@ -3165,19 +2992,16 @@ def restore_snapshot(spark: SparkSession, table_dir: str, version: int) -> int:
         "files": target["files"],
         "schema": target.get("schema"),
         "restored_from": version,
-    }
-    if target.get("stats"):
         # the restored version's stats travel with its file list — a
         # restore that drops them disables skip_where (ADVICE r6)
-        manifest["stats"] = {
-            f: s for f, s in target["stats"].items() if f in set(target["files"])
-        }
-    if target.get("dv_files"):
-        # restoring to a DV-bearing version restores its deletions too
-        manifest["dv_files"] = target["dv_files"]
-    _carry_props(target, manifest, exclude=("refs", "txns"))
-    # restore returns to that version's constraints (consistent with
-    # restoring its schema) — but NOT its refs or txn cursors: tags are
+        "stats": {
+            f: s for f, s in (target.get("stats") or {}).items()
+            if f in set(target["files"])
+        },
+    }
+    # restoring to a DV-bearing version restores its deletions too, and
+    # its constraints and column mapping (consistent with restoring its
+    # schema) — but NOT its refs or txn cursors: tags are
     # TABLE-level pointers into history (all still-valid versions), so
     # the CURRENT head's set is the truth — carrying the target's would
     # silently drop every tag set after it, and the next vacuum would
@@ -3188,7 +3012,7 @@ def restore_snapshot(spark: SparkSession, table_dir: str, version: int) -> int:
     for k in ("refs", "txns"):
         if latest_m.get(k):
             manifest[k] = latest_m[k]
-    _carry_mapping(target, manifest)  # and its column mapping
+    _carry_table(target, manifest, exclude=("refs", "txns"))
     rt_t, rt_l = _rt_of(target), _rt_of(latest_m)
     if rt_t or rt_l:
         # the row-id watermark is MONOTONIC across a restore (Delta's
@@ -3204,12 +3028,7 @@ def restore_snapshot(spark: SparkSession, table_dir: str, version: int) -> int:
             _alloc_row_ids(
                 spark, {"row_tracking": {"next": nxt}}, manifest, target["files"]
             )
-    if not _try_commit(spark, table_dir, new_v, manifest):
-        raise RuntimeError(
-            f"restore_snapshot: version {new_v} was committed concurrently at "
-            f"{table_dir}; re-read and retry"
-        )
-    return new_v
+    return _claim(spark, table_dir, manifest, "restore_snapshot")
 
 
 def vacuum(
@@ -3617,11 +3436,7 @@ def compact_snapshot(
     (data_processing.py:217), so it never accumulates small files — a
     streaming/incremental lakehouse does, hence OPTIMIZE.
     """
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     colmap, _ = _mapping_of(m)
     files = m["files"]
     target_bytes = target_file_mb * 1024 * 1024
@@ -3703,17 +3518,6 @@ def compact_snapshot(
         partition_by=_part_keys(m) or None,
     )
     new_files = _data_files(spark, data_path)
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    if cluster_by:
-        cols = sorted(set(cols) | {_phys(colmap, c) for c in cluster_by})
-    new_stats = _file_stats(spark, new_files, cols) if cols else {}
-    new_stats = _attach_blooms(spark, table_dir, m, new_files, new_stats)
-    kept_stats = {f: s for f, s in m.get("stats", {}).items() if f in set(big)}
     manifest = {
         "version": base_v + 1,
         "op": "replace",
@@ -3727,16 +3531,12 @@ def compact_snapshot(
         manifest["clustered_by"] = list(cluster_by)
         if zorder and len(cluster_by) >= 2:
             manifest["zorder"] = True
-    if dv_files and big:
+    if big:
         manifest["dv_files"] = dv_files  # kept files still need theirs
     # (no kept files -> every DV materialized -> the list drops entirely)
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    _alloc_row_ids(spark, m, manifest, new_files, materialized=True)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="compact_snapshot"
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, new_files, big, "compact_snapshot",
+        stats_cols, cluster_by or (), materialized=True,
     )
 
 
@@ -3753,11 +3553,7 @@ def drop_inert_dv_pointers(spark: SparkSession, table_dir: str) -> int | None:
     versions expire. Returns the committed version, or None when there is
     nothing to drop (no DVs, or some DV still masks a live file — those
     need a real ``reorg_snapshot`` PURGE, which rewrites data)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     dv_files = m.get("dv_files", [])
     if not dv_files:
         return None
@@ -3771,20 +3567,9 @@ def drop_inert_dv_pointers(spark: SparkSession, table_dir: str) -> int | None:
     }
     if dv_paths & {_normpath(f) for f in m["files"]}:
         return None  # some DV still masks a live file: purge territory
-    manifest = {
-        "version": base_v + 1,
-        "op": "reorg",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "files_rewritten": 0,
-    }
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="drop_inert_dv_pointers"
+    return _commit_meta(
+        spark, table_dir, base_v, m, "reorg", {"files_rewritten": 0},
+        exclude=("dv_files",), rebase=True,
     )
 
 
@@ -3812,11 +3597,7 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
     directory-encoded, so footers are compared against the non-partition
     physical schema) plus one scan of the (tiny by contract) DV files.
     """
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     files = m["files"]
     sig = m.get("schema")
     dv_files = m.get("dv_files", [])
@@ -3883,13 +3664,6 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
         partition_by=_part_keys(m) or None,
     )
     new_files = _data_files(spark, data_path)
-    cols = _stats_cols_of(m)
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    if clus_cols:
-        cols = sorted(set(cols) | {_phys(colmap, c) for c in clus_cols})
-    new_stats = _file_stats(spark, new_files, cols) if cols and new_files else {}
-    new_stats = _attach_blooms(spark, table_dir, m, new_files, new_stats)
-    kept_stats = {f: s for f, s in m.get("stats", {}).items() if f in set(keep)}
     manifest = {
         "version": base_v + 1,
         "op": "reorg",
@@ -3898,17 +3672,13 @@ def reorg_snapshot(spark: SparkSession, table_dir: str) -> int | None:
         "schema": sig,
         "files_rewritten": len(needs),
     }
-    if dv_files and dv_paths & {_normpath(f) for f in keep}:
+    if dv_paths & {_normpath(f) for f in keep}:
         manifest["dv_files"] = dv_files  # kept files still need theirs
     # (no kept file referenced -> every live DV materialized -> the
     # pointer list drops, so reads stop paying the inert anti-join)
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    _alloc_row_ids(spark, m, manifest, new_files, materialized=True)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="reorg_snapshot"
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, new_files, keep, "reorg_snapshot",
+        cluster_cols=clus_cols, materialized=True,
     )
 
 
@@ -4371,18 +4141,6 @@ def merge_snapshot(
         f"v{base_v + 1:05d}-merge-cdc-{uuid.uuid4().hex[:12]}",
     )
     new_files = _data_files(spark, data_path)
-    cdc_files = _data_files(spark, cdc_path)
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    if clus_cols:
-        cols = sorted(set(cols) | {_phys(colmap, c) for c in clus_cols})
-    new_stats = _file_stats(spark, new_files, cols) if cols else {}
-    new_stats = _attach_blooms(spark, table_dir, m, new_files, new_stats)
-    kept_stats = {f: s for f, s in stats.items() if f in set(untouched)}
     manifest = {
         "version": base_v + 1,
         "op": "merge",
@@ -4390,25 +4148,19 @@ def merge_snapshot(
         "schema": sig if sig is not None else up_sig,
         "merged_over": base_v,
         "files_rewritten": len(touched),
-        "cdc_files": cdc_files,
+        "cdc_files": _data_files(spark, cdc_path),
+        # rewritten files materialized their DVs; untouched files still
+        # need theirs (entries for removed files are inert)
+        "dv_files": dv_files,
     }
     if clause_mode:
         manifest["merge_clauses"] = {k: v for k, v in clauses.items() if v}
-    if dv_files:
-        # rewritten files materialized their DVs; untouched files still
-        # need theirs (entries for removed files are inert)
-        manifest["dv_files"] = dv_files
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    if extra:
-        manifest.update(extra)
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
+    manifest.update(extra or {})
     # row tracking: rewritten/inserted rows get fresh ids (non-preserving
     # rewrite — Delta semantics); untouched files keep theirs
-    _alloc_row_ids(spark, m, manifest, new_files)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="merge_snapshot"
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, new_files, untouched, "merge_snapshot",
+        stats_cols, clus_cols,
     )
 
 
@@ -4469,11 +4221,7 @@ def delete_snapshot(
 
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"delete_snapshot: unknown mode {mode!r}")
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     files = m["files"]
     stats = m.get("stats", {})
     sig = m.get("schema")
@@ -4527,15 +4275,11 @@ def delete_snapshot(
             "dv_files": dv_files + _data_files(spark, dv_path),
             "cdc_files": _data_files(spark, cdc_path),
         }
-        if stats:
-            # per-file [min,max] stay VALID bounds with rows deleted —
-            # skipping is conservative, never a filter
-            manifest["stats"] = stats
-        _carry_props(m, manifest)
-        _carry_mapping(m, manifest)
-        return _commit_rebase_appends(
-            spark, table_dir, base_v + 1, manifest,
-            op="delete_snapshot", debris="DV dir",
+        # every file is kept: per-file [min,max] stay VALID bounds with
+        # rows deleted — skipping is conservative, never a filter
+        return _commit_rewrite(
+            spark, table_dir, m, manifest, [], files, "delete_snapshot",
+            debris="DV dir",
         )
 
     probe = matched_meta.groupBy("__p").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -4565,39 +4309,24 @@ def delete_snapshot(
         table_dir,
         f"v{base_v + 1:05d}-delete-cdc-{uuid.uuid4().hex[:12]}",
     )
-    new_files = _data_files(spark, data_path)
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    new_stats = _file_stats(spark, new_files, cols) if cols and new_files else {}
-    new_stats = _attach_blooms(spark, table_dir, m, new_files, new_stats)
-    kept_stats = {f: s for f, s in stats.items() if f in set(untouched)}
     manifest = {
         "version": base_v + 1,
         "op": "delete",
-        "files": untouched + new_files,
+        "files": untouched + (new_files := _data_files(spark, data_path)),
         "schema": sig,
         "deleted_where": where,
         "files_rewritten": len(touched),
         "cdc_files": _data_files(spark, cdc_path),
-    }
-    if dv_files:
         # rewritten files materialized their DVs (survivors read through
         # them); untouched files still need theirs — carry the list (the
         # entries for removed files are inert)
-        manifest["dv_files"] = dv_files
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
+        "dv_files": dv_files,
+    }
     # row tracking: survivor rows live in rewritten files -> fresh ids
     # (non-preserving rewrite); use mode='dv' to preserve ids on delete
-    _alloc_row_ids(spark, m, manifest, new_files)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="delete_snapshot"
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, new_files, untouched, "delete_snapshot",
+        stats_cols,
     )
 
 
@@ -4638,11 +4367,7 @@ def update_snapshot(
 
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"update_snapshot: unknown mode {mode!r}")
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     files = m["files"]
     stats = m.get("stats", {})
     sig = m.get("schema")
@@ -4728,36 +4453,21 @@ def update_snapshot(
         table_dir,
         f"v{base_v + 1:05d}-update-cdc-{uuid.uuid4().hex[:12]}",
     )
-    new_files = _data_files(spark, data_path)
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    new_stats = _file_stats(spark, new_files, cols) if cols and new_files else {}
-    new_stats = _attach_blooms(spark, table_dir, m, new_files, new_stats)
-    kept_stats = {f: s for f, s in stats.items() if f in set(untouched)}
     manifest = {
         "version": base_v + 1,
         "op": "update",
-        "files": untouched + new_files,
+        "files": untouched + (new_files := _data_files(spark, data_path)),
         "schema": sig,
         "updated_where": where,
         "files_rewritten": len(touched),
         "cdc_files": _data_files(spark, cdc_path),
+        "dv_files": dv_files,  # untouched files still need theirs
     }
-    if dv_files:
-        manifest["dv_files"] = dv_files  # untouched files still need theirs
-    if kept_stats or new_stats:
-        manifest["stats"] = {**kept_stats, **new_stats}
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
     # row tracking: fresh ids for the rewritten files (update = delete +
     # re-insert under Delta's non-preserving semantics)
-    _alloc_row_ids(spark, m, manifest, new_files)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest, op="update_snapshot"
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, new_files, untouched, "update_snapshot",
+        stats_cols,
     )
 
 
@@ -4941,7 +4651,6 @@ def _update_snapshot_dv(
 
     sig = m.get("schema")
     dv_files = m.get("dv_files", [])
-    stats = m.get("stats", {})
     colmap, _ = _mapping_of(m)
     matched = _read_with_dvs(
         spark, candidates, sig, dv_files, keep_meta=True, colmap=colmap
@@ -4987,36 +4696,22 @@ def _update_snapshot_dv(
         table_dir,
         f"v{base_v + 1:05d}-update-cdc-{uuid.uuid4().hex[:12]}",
     )
-    post_files = _data_files(spark, post_path)
-    cols = (
-        [_phys(colmap, c) for c in stats_cols]
-        if stats_cols is not None
-        else _stats_cols_of(m)
-    )
-    cols = sorted(set(cols) | set(_part_keys(m)))
-    post_stats = _file_stats(spark, post_files, cols) if cols and post_files else {}
-    post_stats = _attach_blooms(spark, table_dir, m, post_files, post_stats)
     manifest = {
         "version": base_v + 1,
         "op": "update",
         "mode": "dv",
-        "files": m["files"] + post_files,
+        "files": m["files"] + (post_files := _data_files(spark, post_path)),
         "schema": sig,
         "updated_where": where,
         "files_rewritten": 0,
         "dv_files": dv_files + _data_files(spark, dv_path),
         "cdc_files": _data_files(spark, cdc_path),
     }
-    if stats or post_stats:
-        manifest["stats"] = {**stats, **post_stats}
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
     # row tracking: postimage files are physically new rows -> fresh ids;
-    # DV-hidden originals keep their (now shadowed) positions
-    _alloc_row_ids(spark, m, manifest, post_files)
-    return _commit_rebase_appends(
-        spark, table_dir, base_v + 1, manifest,
-        op="update_snapshot", debris="DV/postimage dirs",
+    # DV-hidden originals keep their (now shadowed) positions and stats
+    return _commit_rewrite(
+        spark, table_dir, m, manifest, post_files, m["files"], "update_snapshot",
+        stats_cols, debris="DV/postimage dirs",
     )
 
 
@@ -5375,11 +5070,7 @@ def analyze_snapshot(
     how stale they are. Version races abort."""
     from pyspark.sql import functions as F
 
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema") or []
     names = [n for n, _ in sig]
     use = cols if cols is not None else names
@@ -5400,25 +5091,9 @@ def analyze_snapshot(
             for c in use
         },
     }
-    manifest = {
-        "version": base_v + 1,
-        "op": "analyze",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-        "table_stats": table_stats,
-    }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest)
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"analyze_snapshot: version {base_v + 1} was committed concurrently "
-            f"at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "analyze", {"table_stats": table_stats}
+    )
 
 
 def maintain_snapshot(
@@ -5455,10 +5130,7 @@ def maintain_snapshot(
     step 2. Conflict behavior is inherited (a racing writer aborts the
     compaction; rerun next tick — maintenance must never win over
     data)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    m = _read_manifest(spark, table_dir, versions[-1])
+    _, m = _latest(spark, table_dir)
     sizes = _file_sizes(spark, m["files"])
     small = [f for f in m["files"] if sizes[f] < target_file_mb * 1024 * 1024]
     compacted = None
@@ -5493,11 +5165,7 @@ def set_generated_column(
     Declare-at-create flow: commit v1 with the column precomputed, then
     declare it generated. The rename/drop guards already refuse mutating
     a column a (paired) constraint references."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema") or []
     names = [n for n, _ in sig]
     if name not in names:
@@ -5511,25 +5179,11 @@ def set_generated_column(
         {f"__gen_{name}": check},
         "set_generated_column",
     )
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_generated",
-        "data_change": False,
-        "files": m["files"],
-        "schema": sig,
+    edit = {
         "generated": {**m.get("generated", {}), name: expr},
         "constraints": {**m.get("constraints", {}), f"__gen_{name}": check},
     }
-    for k in ("stats", "dv_files", "table_stats"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_generated_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(spark, table_dir, base_v, m, "set_generated", edit)
 
 
 def set_identity_column(
@@ -5568,11 +5222,7 @@ def set_identity_column(
         raise ValueError(
             f"set_identity_column: mode must be 'always' or 'default', got {mode!r}"
         )
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     sig = m.get("schema") or []
     types = {n: t for n, t in sig}
     if name not in types:
@@ -5596,100 +5246,43 @@ def set_identity_column(
     high = start - step
     if existing_max is not None:
         high = max(high, int(existing_max))
-    manifest = {
-        "version": base_v + 1,
-        "op": "set_identity",
-        "data_change": False,
-        "files": m["files"],
-        "schema": sig,
-        "identity": {
-            **m.get("identity", {}),
-            name: {"start": start, "step": step, "mode": mode, "high": high},
-        },
+    ident = {
+        **m.get("identity", {}),
+        name: {"start": start, "step": step, "mode": mode, "high": high},
     }
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("identity",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"set_identity_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "set_identity", {"identity": ident}
+    )
 
 
 def drop_identity_column(spark: SparkSession, table_dir: str, name: str) -> int:
     """Un-declare an identity column (the column and its minted values
     stay; only the allocation rule and watermark go)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     ident = dict(m.get("identity", {}))
     if name not in ident:
         raise KeyError(
             f"no identity column {name!r} at {table_dir} (have {sorted(ident)})"
         )
     del ident[name]
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_identity",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    if ident:
-        manifest["identity"] = ident
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    _carry_props(m, manifest, exclude=("identity",))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_identity_column: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_identity",
+        {"identity": ident or None}, exclude=("identity",),
+    )
 
 
 def drop_generated_column_expr(spark: SparkSession, table_dir: str, name: str) -> int:
     """Un-declare a generated column (the column and its data stay; only
     the generation rule and its paired CHECK go)."""
-    versions = _list_versions(spark, table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    base_v = versions[-1]
-    m = _read_manifest(spark, table_dir, base_v)
+    base_v, m = _latest(spark, table_dir)
     gen = dict(m.get("generated", {}))
     if name not in gen:
         raise KeyError(f"no generated column {name!r} at {table_dir} (have {sorted(gen)})")
     del gen[name]
     cons = {k: v for k, v in m.get("constraints", {}).items() if k != f"__gen_{name}"}
-    manifest = {
-        "version": base_v + 1,
-        "op": "drop_generated",
-        "data_change": False,
-        "files": m["files"],
-        "schema": m.get("schema"),
-    }
-    if gen:
-        manifest["generated"] = gen
-    if cons:
-        manifest["constraints"] = cons
-    for k in ("stats", "dv_files"):
-        if m.get(k):
-            manifest[k] = m[k]
-    # generated/constraints excluded: this drop owns both (the paired
-    # __gen CHECK goes with the rule); everything else carries
-    _carry_props(m, manifest, exclude=("generated", "constraints"))
-    _carry_mapping(m, manifest)
-    if not _try_commit(spark, table_dir, base_v + 1, manifest):
-        raise RuntimeError(
-            f"drop_generated_column_expr: version {base_v + 1} was committed "
-            f"concurrently at {table_dir}; re-read and retry"
-        )
-    return base_v + 1
+    # this drop owns both (the paired __gen CHECK goes with the rule)
+    return _commit_meta(
+        spark, table_dir, base_v, m, "drop_generated",
+        {"generated": gen or None, "constraints": cons or None},
+        exclude=("generated", "constraints"),
+    )

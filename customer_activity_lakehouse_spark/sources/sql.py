@@ -534,10 +534,7 @@ def _describe_refs(spark: SparkSession, path: str) -> DataFrame:
     from . import refs as R
     from . import snapshots as _S
 
-    versions = _S._list_versions(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    tags = R.tags_of(_S._read_manifest(spark, path, versions[-1]))
+    tags = R.tags_of(_S._latest(spark, path)[1])
     rows = [("tag", n, int(v), None) for n, v in sorted(tags.items())]
     for n, info in sorted(R.list_branches(spark, path).items()):
         rows.append(("branch", n, info["base_version"], info["head_version"]))
@@ -920,10 +917,7 @@ def _optimize(spark: SparkSession, s: str) -> int | None:
         if zcols is not None:
             raise ValueError("OPTIMIZE FULL uses the declared CLUSTER BY "
                              "columns; drop the ZORDER BY clause")
-        latest = S._list_versions(spark, path)
-        if not latest:
-            raise FileNotFoundError(f"no snapshots at {path}")
-        clus = S._read_manifest(spark, path, latest[-1]).get("clustering")
+        clus = S._latest(spark, path)[1].get("clustering")
         if not clus:
             raise ValueError(
                 f"OPTIMIZE FULL: no clustering columns declared at {path} "

@@ -679,17 +679,9 @@ def write_stream_snapshot_append(
             partition_by=part_phys or None,
         )
         new_files = snap._data_files(spark, data_path)
-        stat_keys = (
-            [snap._phys(mapping[1], c) for c in stats_cols]
-            if mapping and stats_cols
-            else list(stats_cols or [])
-        )
-        stat_keys = sorted(set(stat_keys) | set(part_phys))
-        new_stats = (
-            snap._file_stats(spark, new_files, stat_keys) if stat_keys else {}
-        )
-        new_stats = snap._attach_blooms(
-            spark, table_dir, latest_m if versions else None, new_files, new_stats
+        new_stats = snap._index_new_files(
+            spark, table_dir, latest_m if versions else None, new_files,
+            stats_cols, mapping[1] if mapping else None, part_phys,
         )
         snap._commit_append_files(
             spark,

@@ -308,3 +308,32 @@ def test_maintain_backfills_datasource_written_files(spark, tmp_path):
     # idempotent: nothing left to backfill
     out2 = maintain_snapshot(spark, t, max_small_files=99, keep_versions=99)
     assert out2["bloom_backfilled"] is None
+
+
+def test_point_lookup_after_type_widening(spark, tmp_path):
+    """Files indexed before widen_snapshot_column hashed the column as the
+    narrower type, and xxhash64 of int and bigint differ: a probe hashed
+    only as bigint missed them and pruned the file that holds the row.
+    The widen commit records the old type in the bloom spec, and a file
+    survives when a probe under ANY recorded type hits."""
+    from pyspark.sql import functions as F
+
+    from customer_activity_lakehouse_spark.sources.snapshots import (
+        _read_manifest,
+        widen_snapshot_column,
+    )
+
+    t = str(tmp_path / "tbl")
+    ints = spark.range(0, 100).select(F.col("id").cast("int").alias("a")).coalesce(1)
+    commit_append(spark, t, ints.filter("a < 50"))  # v1: pre-spec, uncovered
+    set_bloom_filter(spark, t, ["a"], m_bits=M, k=K)
+    commit_append(spark, t, ints.filter("a >= 50"))  # v3: hashed as int
+    v = widen_snapshot_column(spark, t, "a", "bigint")
+    assert _read_manifest(spark, t, v)["bloom"]["widened"] == {"a": ["int"]}
+    hit = read_snapshot(spark, t, point_where={"a": 70})
+    assert hit.where("a = 70").count() == 1
+    commit_append(spark, t, spark.range(100, 120).selectExpr("id AS a").coalesce(1))
+    assert read_snapshot(spark, t, point_where={"a": 110}).where("a = 110").count() == 1
+    # each lookup keeps the uncovered v1 file plus the one file holding it
+    assert len(_files(read_snapshot(spark, t, point_where={"a": 70}))) == 2
+    assert len(_files(read_snapshot(spark, t, point_where={"a": 110}))) == 2

@@ -3132,3 +3132,113 @@ def test_fsck_chain_repair_respects_branch_audit_range(spark, tmp_path):
     rep2 = S.fsck_snapshot(spark, t, repair=True)
     assert rep2["chain_expired"] == [4, 5, 6, 7, 8, 9]
     assert S.fsck_snapshot(spark, t)["unresolvable_versions"] == []
+
+
+@pytest.fixture(scope="module")
+def meta_table(spark, tmp_path_factory):
+    """One small table carrying every table property a metadata verb can
+    set or drop, for the lost-slot battery below (a verb that aborts
+    leaves the table as it was, so all of them share it)."""
+    import customer_activity_lakehouse_spark.sources.snapshots as S
+    from customer_activity_lakehouse_spark.sources.refs import set_tag
+
+    t = str(tmp_path_factory.mktemp("meta") / "t")
+    df = spark.range(0, 20).selectExpr(
+        "id", "format_string('k%04d', id) AS k", "CAST(id % 5 AS INT) AS a",
+        "id * 2 AS g", "id + 100 AS h",
+    ).coalesce(1)
+    commit_append(spark, t, df.filter("id < 10"))  # v1: never bloom-indexed
+    S.set_bloom_filter(spark, t, ["k"], m_bits=2**13, k=4)
+    commit_append(spark, t, df.filter("id >= 10"))  # indexed: one sidecar
+    S.set_generated_column(spark, t, "g", "id * 2")
+    S.set_check_constraint(spark, t, "pos", "id >= 0")
+    S.set_unique_key(spark, t, ["id"])
+    S.set_cluster_columns(spark, t, ["id"])
+    S.set_identity_column(spark, t, "h", mode="default")
+    set_tag(spark, t, "audit")
+    return t
+
+
+def _hide_sidecars_and_fsck(spark, t):
+    import customer_activity_lakehouse_spark.sources.snapshots as S
+
+    side = list((Path(t) / "_bloom").glob("*.json"))
+    for p in side:
+        p.rename(p.with_name(p.name + ".hidden"))
+    try:
+        return S.fsck_snapshot(spark, t, repair=True)
+    finally:
+        for p in side:
+            p.with_name(p.name + ".hidden").rename(p)
+
+
+_META_VERBS = {
+    "rename_column": lambda S, R, sp, t: S.rename_snapshot_column(sp, t, "a", "a2"),
+    "drop_column": lambda S, R, sp, t: S.drop_snapshot_column(sp, t, "a"),
+    "widen_column": lambda S, R, sp, t: S.widen_snapshot_column(sp, t, "a", "bigint"),
+    "set_unique_key": lambda S, R, sp, t: S.set_unique_key(sp, t, ["k"], name="uk2"),
+    "drop_unique_key": lambda S, R, sp, t: S.drop_unique_key(sp, t),
+    "enable_row_tracking": lambda S, R, sp, t: S.enable_row_tracking(sp, t),
+    "set_check": lambda S, R, sp, t: S.set_check_constraint(sp, t, "lo", "id < 99"),
+    "drop_check": lambda S, R, sp, t: S.drop_check_constraint(sp, t, "pos"),
+    "set_bloom": lambda S, R, sp, t: S.set_bloom_filter(sp, t, ["a"]),
+    "drop_bloom": lambda S, R, sp, t: S.drop_bloom_filter(sp, t),
+    "bloom_backfill": lambda S, R, sp, t: S.backfill_bloom_filters(sp, t),
+    "set_partitioning": lambda S, R, sp, t: S.set_partition_spec(sp, t, ["a"]),
+    "set_clustering": lambda S, R, sp, t: S.set_cluster_columns(sp, t, ["k"]),
+    "drop_clustering": lambda S, R, sp, t: S.drop_cluster_columns(sp, t),
+    "analyze": lambda S, R, sp, t: S.analyze_snapshot(sp, t, ["a"]),
+    "set_identity": lambda S, R, sp, t: S.set_identity_column(sp, t, "id", mode="default"),
+    "drop_identity": lambda S, R, sp, t: S.drop_identity_column(sp, t, "h"),
+    "set_generated": lambda S, R, sp, t: S.set_generated_column(sp, t, "h", "id + 100"),
+    "drop_generated": lambda S, R, sp, t: S.drop_generated_column_expr(sp, t, "g"),
+    "set_tag": lambda S, R, sp, t: R.set_tag(sp, t, "later"),
+    "drop_tag": lambda S, R, sp, t: R.drop_tag(sp, t, "audit"),
+    "fsck": lambda S, R, sp, t: _hide_sidecars_and_fsck(sp, t),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_META_VERBS))
+def test_metadata_verb_aborts_on_lost_slot(spark, meta_table, monkeypatch, verb):
+    """Every metadata-only verb claims its version slot once: when the
+    claim loses (a competitor's commit landed first), the verb raises
+    and adds no version — it never overwrites or rebases over a commit
+    it did not read."""
+    import customer_activity_lakehouse_spark.sources.refs as R
+    import customer_activity_lakehouse_spark.sources.snapshots as S
+
+    before = S._list_versions(spark, meta_table)
+    calls = []
+
+    def lose_once(*args, **kwargs):
+        calls.append(args[2])
+        return False
+
+    monkeypatch.setattr(S, "_try_commit", lose_once)
+    with pytest.raises(RuntimeError, match="committed concurrently"):
+        _META_VERBS[verb](S, R, spark, meta_table)
+    assert calls == [before[-1] + 1]
+    monkeypatch.undo()
+    assert S._list_versions(spark, meta_table) == before
+
+
+def test_set_generated_column_keeps_table_properties(spark, tmp_path):
+    """set_generated_column built its manifest from a hand-picked key
+    list and dropped every other table property — the bloom spec, the
+    layout and the row-id watermark vanished with one declaration."""
+    import customer_activity_lakehouse_spark.sources.snapshots as S
+
+    t = str(tmp_path / "t")
+    commit_append(
+        spark, t, spark.range(0, 6).selectExpr("id", "CAST(id % 2 AS INT) AS p",
+                                               "id * 2 AS g"),
+        partition_by=["p"],
+    )
+    S.set_bloom_filter(spark, t, ["id"], m_bits=2**13, k=4)
+    S.enable_row_tracking(spark, t)
+    before = S._read_manifest(spark, t, S._list_versions(spark, t)[-1])
+    v = S.set_generated_column(spark, t, "g", "id * 2")
+    m = S._read_manifest(spark, t, v)
+    for key in ("partition_by", "bloom", "row_tracking"):
+        assert m[key] == before[key]
+    assert m["generated"] == {"g": "id * 2"}
