@@ -1,14 +1,18 @@
 """Vector expressions over array<float> embedding columns.
 
 Built on higher-order functions (zip_with / aggregate) so the arithmetic runs
-JVM-side per row — no Python, no UDF serialization. The Arrow-batched
-pandas_udf variants use the order-exact NumPy folds of
-plans/vector_kernels.py (the one module that keeps their numeric contract
-with these expressions) for the paths where vectorized batches beat
-interpreted HOF lambdas.
+JVM-side per row — no Python, no UDF serialization. ``dot`` and ``l2_norm``
+are the package's one float dot/norm fold: every catalog entry that needs an
+exact cosine uses them, and a source scan in tests/test_vector_kernels.py
+keeps copies from growing back. The Arrow-batched pandas_udf paths use the
+order-exact NumPy folds of plans/vector_kernels.py, the one module that
+keeps their numeric contract with these expressions.
 
 All math in double precision regardless of the stored float32 — matches what
-DuckDB's list functions do, keeping oracle hashes stable.
+DuckDB's list functions do, keeping oracle hashes stable. The left fold from
+0.0 is the op order of the DuckDB twins (``llm_ops._SQL_DOT``); a cast of an
+already-double element is a no-op, so the same expressions serve pre-cast
+arrays.
 """
 
 from __future__ import annotations

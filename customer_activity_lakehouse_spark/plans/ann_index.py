@@ -64,6 +64,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import dot, l2_norm
 from ..session import run_concurrently
 from .ml_ops import (
     KM_SCALE,
@@ -83,7 +84,14 @@ from .ml_ops import (
     _train_divisor,
 )
 from .registry import Query, table
-from .vector_kernels import adc_cos, argmin_sq, cents_arrays, int_norm, rows_matrix
+from .vector_kernels import (
+    adc_cos,
+    argmin_sq,
+    cents_arrays,
+    int_norm,
+    rank_cells,
+    rows_matrix,
+)
 
 ANN_TOPK = 10
 # Refine-stage candidate pool (r14, VERDICT r13 missing #2): the ADC
@@ -360,8 +368,9 @@ def query_ann_index(
 
     1. probe: squared distance of q against the nlist-row centroid
        table, take the ceil(sqrt(nlist)) nearest (`_serve_probes` of the
-       persisted cell count — a driver-bounded ≤nlist-row collect; the
-       prefix feeds partition pruning);
+       persisted cell count — a driver-bounded ≤nlist-row collect ranked
+       on the driver by `vector_kernels.rank_cells`; the prefix feeds
+       partition pruning);
     2. candidates: ``partition_where={'cell': probes}`` on the codes
        table — manifest-level partition pruning, so only the probed
        cells' files are ever listed;
@@ -380,14 +389,15 @@ def query_ann_index(
     the exact query, rounded to 4dp, ties broken by vec_id."""
     from ..sources.snapshots import read_snapshot
 
-    order = _ordered_cells(spark, index_dir, query_q)
+    qq = _query_vec(query_q)
+    order = _ordered_cells(spark, index_dir, qq)
     probes = order[: _serve_probes(len(order))]
     codes = read_snapshot(
         spark, f"{index_dir}/codes", partition_where={"cell": probes}
     )
     if exclude_id is not None:
         codes = codes.filter(F.col("vec_id") != exclude_id)
-    return _adc_topk(spark, index_dir, query_q, codes, k)
+    return _adc_topk(spark, index_dir, qq, codes, k)
 
 
 def query_ann_index_refined(
@@ -422,8 +432,6 @@ def query_ann_index_refined(
     Returns (vec_id, cos_sim) with cos_sim the EXACT 4dp cosine — ties
     by vec_id, same rounding convention as the brute-force baseline, so
     within the pool the refined ranking IS the exact ranking."""
-    from .llm_ops import _dot_expr, _norm_expr
-
     qq = query_emb.select(
         F.transform(
             "embedding", lambda x: F.floor(x.cast("double") * KM_SCALE)
@@ -432,9 +440,7 @@ def query_ann_index_refined(
     adc = query_ann_index(spark, index_dir, qq, k=pool, exclude_id=exclude_id)
     ids = [int(r["vec_id"]) for r in adc.select("vec_id").collect()]  # ≤pool
     qraw = query_emb.select(F.col("embedding").alias("q_emb"))
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         corpus_emb.filter(F.col("vec_id").isin(ids))
         .crossJoin(F.broadcast(qraw))
@@ -444,35 +450,36 @@ def query_ann_index_refined(
     )
 
 
-def _ordered_cells(
-    spark: SparkSession, index_dir: str, query_q: DataFrame
-) -> list[int]:
-    """ALL IVF cells in ascending squared-distance-to-query order (ties to
-    the smaller cluster id) — one driver-bounded collect of ≤K rows; the
-    prefix of this list is what partition pruning probes."""
+def _query_vec(query_q: DataFrame) -> np.ndarray:
+    """The one-row query frame's quantized ``q`` as a driver array —
+    fetched once per single serve and shared by the probe and the ADC
+    scorer."""
+    qrow = query_q.select("q").head()
+    if qrow is None:
+        raise ValueError(
+            "ANN serve: empty query frame — exactly one query row required"
+        )
+    return np.asarray(qrow[0], dtype=np.int64)
+
+
+def _cell_orders(spark: SparkSession, index_dir: str, qs) -> list[list[int]]:
+    """Every query's IVF cells, nearest first (ties to the smaller cluster
+    id): one driver-bounded collect of the ≤K centroid rows, ranked on the
+    driver by `vector_kernels.rank_cells`. ``qs`` holds the quantized query
+    vectors; a prefix of each list is what partition pruning probes."""
     from ..sources.snapshots import read_snapshot
 
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    rows = (
-        query_q.crossJoin(F.broadcast(carr))
-        .select(F.explode("cents").alias("cent"), "q")
-        .select(F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
-        .orderBy("cdist", "cluster")
-        .collect()
-    )
-    return [int(r["cluster"]) for r in rows]
+    rows = _centroid_rows(read_snapshot(spark, f"{index_dir}/ivf_centroids"))
+    return rank_cells(rows, qs)
+
+
+def _ordered_cells(
+    spark: SparkSession, index_dir: str, query: DataFrame | np.ndarray
+) -> list[int]:
+    """ALL IVF cells in ascending squared-distance order for one query —
+    its one-row frame or its already-fetched vector (`_query_vec`)."""
+    qq = _query_vec(query) if isinstance(query, DataFrame) else query
+    return _cell_orders(spark, index_dir, [qq])[0]
 
 
 def _adc_code_cos_udf(spark: SparkSession, book, qq_fixed: np.ndarray | None):
@@ -522,7 +529,7 @@ def _adc_code_cos_udf(spark: SparkSession, book, qq_fixed: np.ndarray | None):
 def _adc_topk(
     spark: SparkSession,
     index_dir: str,
-    query_q: DataFrame,
+    qq: np.ndarray,
     codes: DataFrame,
     k: int,
 ) -> DataFrame:
@@ -536,12 +543,6 @@ def _adc_topk(
     from ..sources.snapshots import read_snapshot
 
     book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
-    qrow = query_q.select("q").head()
-    if qrow is None:
-        raise ValueError(
-            "_adc_topk: empty query frame — exactly one query row required"
-        )
-    qq = np.asarray(qrow[0], dtype=np.int64)
     adc = _adc_code_cos_udf(spark, book, qq)
     return (
         codes.select("vec_id", F.round(adc("code"), 4).alias("cos_sim"))
@@ -561,13 +562,11 @@ def query_ann_index_batch(
     the throughput shape of a serving tier (one probed-cells scan
     amortized over the whole batch, instead of |batch| separate jobs):
 
-    1. per-query probes DISTRIBUTIVELY: each (qid, q) row folds over the
-       broadcast centroid array and a row_number window PARTITIONED BY
-       qid (bounded: ≤nlist cells per query, WindowGroupLimit) keeps its
-       `_serve_probes(nlist)` nearest cells — no driver work per query;
-    2. ONE partition-pruned read of the UNION of probed cells (the only
-       driver-bounded collect: ≤K distinct cell ids, independent of
-       batch size);
+    1. probes on the driver: the ≤|batch| (qid, q) rows and the ≤K
+       centroid rows are collected once, and every query is ranked with
+       `vector_kernels.rank_cells` — the single serve's ranking — keeping
+       its `_serve_probes(nlist)` nearest cells;
+    2. ONE partition-pruned read of the UNION of probed cells;
     3. candidates = codes ⋈ broadcast probe pairs on cell — each code
        row is scored only for the queries that probed its cell, with the
        query vector arriving ON the row (same `adc_cos` folds as the
@@ -582,38 +581,41 @@ def query_ann_index_batch(
     cos_sim), ordered within each query by (cos_sim desc, vec_id); each
     query's rows equal `query_ann_index`'s for the same vector
     (pytest-pinned)."""
+    qrows = queries_q.select("qid", "q").collect()  # ≤|batch| rows
+    orders = _cell_orders(spark, index_dir, [q for _, q in qrows])
+    probes = [
+        (qid, q, cells[: _serve_probes(len(cells))])
+        for (qid, q), cells in zip(qrows, orders)
+    ]
+    return _batch_topk(spark, index_dir, probes, k, exclude_self)
+
+
+def _batch_topk(
+    spark: SparkSession,
+    index_dir: str,
+    probes: list[tuple[int, list[int], list[int]]],
+    k: int,
+    exclude_self: bool,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """The shared tail of both batch serves: ``probes`` lists each query's
+    (qid, q, probed cells). One partition-pruned codes read of the cells'
+    union (semi-joined to ``allowed`` when given), joined to the
+    broadcast (qid, cell, qq) pairs, ADC-scored with the per-row query
+    and cut to the top-k per qid."""
     from ..sources.snapshots import read_snapshot
 
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    n_probe = _serve_probes(cents.count())  # one nlist-row count
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
+    pairs = spark.createDataFrame(
+        [(int(qid), c, list(q)) for qid, q, cells in probes for c in cells],
+        "qid long, cell int, qq array<long>",
     )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    w_probe = Window.partitionBy("qid").orderBy("cdist", "cluster")
-    probes = (
-        queries_q.crossJoin(F.broadcast(carr))
-        .select("qid", "q", F.explode("cents").alias("cent"))
-        .select("qid", "q", F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", F.col("q").alias("qq"), F.col("cluster").alias("cell"))
-    )
-    cell_union = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
+    cell_union = sorted({c for _, _, cells in probes for c in cells})
     codes = read_snapshot(
         spark, f"{index_dir}/codes", partition_where={"cell": cell_union}
     )
-    cand = codes.join(F.broadcast(probes), "cell")
+    if allowed is not None:
+        codes = codes.join(F.broadcast(allowed), "vec_id", "left_semi")
+    cand = codes.join(F.broadcast(pairs), "cell")
     if exclude_self:
         cand = cand.filter(F.col("vec_id") != F.col("qid"))
     book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
@@ -648,37 +650,17 @@ def query_ann_index_batch_where(
     step — right for ONE selective query, |batch|·steps jobs for a
     batch), the batch path pays ONE narrow counting scan: codes
     semi-joined to ``allowed``, grouped by cell — a 2-column read whose
-    K-row result lets the driver walk every query's cell order and pick
-    its prefix without further I/O. Batch amortization is the point:
-    one count scan + one pruned score read serve the whole batch. The
-    driver-side state is K cell counts + |batch|·K ranking rows +
-    ≤|batch| own-cell rows — all bounded by batch size and cell count,
-    never by corpus size."""
+    K-row result lets the driver walk every query's cell order (ranked
+    on the driver as in :func:`query_ann_index_batch`) and pick its
+    prefix without further I/O. Batch amortization is the point: one
+    count scan + one pruned score read serve the whole batch. The
+    driver-side state is K centroid rows and cell counts, |batch| query
+    rows and cell orders, and ≤|batch| own-cell rows — all bounded by
+    batch size and cell count, never by corpus size."""
     from ..sources.snapshots import read_snapshot
 
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    ranking_rows = (
-        queries_q.crossJoin(F.broadcast(carr))
-        .select("qid", F.explode("cents").alias("cent"), "q")
-        .select("qid", F.col("cent.cluster").alias("cell"), cent_dist.alias("cdist"))
-        .orderBy("qid", "cdist", "cell")
-        .collect()
-    )  # |batch|·K rows — driver-bounded by batch size × cell count
-    order: dict[int, list[int]] = {}
-    for r in ranking_rows:
-        order.setdefault(int(r["qid"]), []).append(int(r["cell"]))
+    qrows = queries_q.select("qid", "q").collect()  # ≤|batch| rows
+    orders = _cell_orders(spark, index_dir, [q for _, q in qrows])
     sem = allowed.select("vec_id")
     filtered = read_snapshot(spark, f"{index_dir}/codes").join(
         F.broadcast(sem), "vec_id", "left_semi"
@@ -689,15 +671,15 @@ def query_ann_index_batch_where(
     }  # ≤K rows
     own_cell: dict[int, int] = {}
     if exclude_self:
-        qids = sorted(order)
+        qids = sorted({int(qid) for qid, _ in qrows})
         own_cell = {
             int(r["vec_id"]): int(r["cell"])
             for r in filtered.filter(F.col("vec_id").isin(qids))
             .select("vec_id", "cell")
             .collect()
         }  # ≤|batch| rows
-    used: dict[int, int] = {}
-    for qid, cells in order.items():
+    probes = []
+    for (qid, q), cells in zip(qrows, orders):
         n_probe = _serve_probes(len(cells))
         surv, m = 0, 0
         for m, cell in enumerate(cells, start=1):
@@ -706,32 +688,8 @@ def query_ann_index_batch_where(
                 surv -= 1
             if m >= n_probe and surv >= k:
                 break
-        used[qid] = m
-    probe_pairs = spark.createDataFrame(
-        [(qid, c) for qid, cells in order.items() for c in cells[: used[qid]]],
-        "qid long, cell int",
-    ).join(
-        queries_q.select("qid", F.col("q").alias("qq")), "qid"
-    )
-    cell_union = sorted({c for qid, cells in order.items() for c in cells[: used[qid]]})
-    codes = read_snapshot(
-        spark, f"{index_dir}/codes", partition_where={"cell": cell_union}
-    ).join(F.broadcast(sem), "vec_id", "left_semi")
-    cand = codes.join(F.broadcast(probe_pairs), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col("vec_id") != F.col("qid"))
-    book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
-    adc = _adc_code_cos_udf(spark, book, None)  # per-row qq (batch serve)
-    scored = cand.select(
-        "qid", "vec_id", F.round(adc("code", "qq"), 4).alias("cos_sim")
-    )
-    w_k = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_k))
-        .filter(F.col("rk") <= k)
-        .select("qid", "vec_id", "cos_sim")
-        .orderBy("qid", F.col("cos_sim").desc(), "vec_id")
-    )
+        probes.append((qid, q, cells[:m]))
+    return _batch_topk(spark, index_dir, probes, k, exclude_self, sem)
 
 
 def query_ann_index_where(
@@ -766,7 +724,8 @@ def query_ann_index_where(
     pruned count each), the same bound as the probe collect."""
     from ..sources.snapshots import read_snapshot
 
-    order = _ordered_cells(spark, index_dir, query_q)
+    qq = _query_vec(query_q)
+    order = _ordered_cells(spark, index_dir, qq)
     sem = allowed.select("vec_id")
 
     def _cells_codes(cells: list[int]) -> DataFrame:
@@ -782,7 +741,7 @@ def query_ann_index_where(
     while survivors < k and used < len(order):
         survivors += _cells_codes(order[used : used + 1]).count()
         used += 1
-    return _adc_topk(spark, index_dir, query_q, _cells_codes(order[:used]), k)
+    return _adc_topk(spark, index_dir, qq, _cells_codes(order[:used]), k)
 
 
 # --------------------------------------------------------------- catalog
@@ -820,14 +779,7 @@ def q_ann_index_build(spark: SparkSession, sf: str) -> DataFrame:
     idx = _index_dir(spark, sf)
     codes = read_snapshot(spark, f"{idx}/codes")
     cents = read_snapshot(spark, f"{idx}/ivf_centroids")
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.transform("c", lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-            )
-        ),
-        4,
-    )
+    l2 = F.round(l2_norm("c"), 4)
     counts = codes.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
     return (
         cents.select(F.col("cluster").alias("cell"), l2.alias("centroid_l2"))
@@ -894,7 +846,7 @@ def _refined_sql_parts() -> tuple[list[str], str]:
     """(with_parts, final_select) of the refined-serve oracle: the scaled
     IVF-PQ chain's ADC ranking cut at REFINE_POOL, then an exact-cosine
     re-rank over the raw embeddings (the `_SQL_DOT` fold — the proven
-    bit-identical twin of the Spark `_dot_expr` path)."""
+    bit-identical twin of the Spark `functions.vectors.dot` path)."""
     from .llm_ops import _SQL_DOT, _SQL_NORM_A, _SQL_NORM_Q
 
     parts, final = _ivfpq_sql_chain(scaled=True)

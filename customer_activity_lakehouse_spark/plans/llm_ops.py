@@ -49,6 +49,7 @@ from ..functions.text import (
     language_argmax,
     language_scores,
 )
+from ..functions.vectors import dot, l2_norm
 from ..operators.joins import dim_join
 from .registry import Query, materialize, table
 from .vector_kernels import rows_matrix, seq_sum
@@ -1890,37 +1891,6 @@ GROUP BY simhash HAVING count(*) > 1
 _DIM = 64
 
 
-def _dot_expr(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm_expr(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-# Variants over ALREADY-double arrays (pre-cast once per row, not per pair —
-# same fold order, so results are bit-identical to _dot_expr/_norm_expr on
-# cast inputs).
-def _dot_expr_pre(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm_expr_pre(a):
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-
-
 # DuckDB twins: sequential left-to-right double folds, same op order as Spark.
 _SQL_DOT = (
     "list_sum(list_transform(range(1, {d}+1), i -> a.embedding[i]::DOUBLE * q.embedding[i]::DOUBLE))"
@@ -1935,9 +1905,7 @@ def _bruteforce_topk(spark: SparkSession, sf: str, k: int) -> DataFrame:
     is engine-independent."""
     emb = table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -2013,9 +1981,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb"), F.col("bucket").alias("q_bucket")
     )
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         emb.crossJoin(F.broadcast(q))
         .filter((F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != 0))
@@ -2058,10 +2024,10 @@ def q_dedup_embedding_cosine(
     emb = _spread(spark, base).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    emb = emb.select("vec_id", "e", _norm_expr_pre(F.col("e")).alias("nrm"))
+    emb = emb.select("vec_id", "e", l2_norm("e").alias("nrm"))
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"), F.col("nrm").alias("na"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb"))
-    cos = _dot_expr_pre(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = dot("ea", "eb") / (F.col("na") * F.col("nb"))
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos_sim", F.round(cos, 4))
@@ -2113,12 +2079,12 @@ def q_embedding_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id",
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    ).select("vec_id", "label", "e", _norm_expr_pre(F.col("e")).alias("nrm"))
+    ).select("vec_id", "label", "e", l2_norm("e").alias("nrm"))
     bench = prep.filter(F.col("vec_id") % EMB_DECON_MOD == 0).select(
         F.col("vec_id").alias("b_id"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
     )
     corpus = prep.filter(F.col("vec_id") % EMB_DECON_MOD != 0)
-    cos = F.round(_dot_expr_pre(F.col("e"), F.col("eb")) / (F.col("nrm") * F.col("nb")), 4)
+    cos = F.round(dot("e", "eb") / (F.col("nrm") * F.col("nb")), 4)
     per_vec = (
         corpus.join(F.broadcast(bench))
         .withColumn("cos_sim", cos)
@@ -2467,9 +2433,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     cent = cent_src.groupBy("label").agg(F.expr(sums_sql)).selectExpr("label", cent_sql)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cent_cos = _dot_expr(F.col("centroid"), F.col("q_emb")) / (
-        _norm_expr(F.col("centroid")) * _norm_expr(F.col("q_emb"))
-    )
+    cent_cos = dot("centroid", "q_emb") / (l2_norm("centroid") * l2_norm("q_emb"))
     best = (
         cent.crossJoin(F.broadcast(q))
         .select("label", F.round(cent_cos, 4).alias("ccos"))
@@ -2477,9 +2441,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
         .limit(1)
         .select("label")
     )
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         emb.join(F.broadcast(best), "label")
         .filter(F.col("vec_id") != 0)
@@ -2614,7 +2576,7 @@ def q_ann_topk_pandas(spark: SparkSession, sf: str) -> DataFrame:
     qvec = np.asarray(
         emb.filter(F.col("vec_id") == 0).select("embedding").head()[0], dtype=np.float64
     )
-    q_norm = float(np.sqrt(seq_sum(qvec * qvec)))  # matches _norm_expr exactly
+    q_norm = float(np.sqrt(seq_sum(qvec * qvec)))  # matches functions.vectors.l2_norm exactly
 
     @F.pandas_udf("double")
     def cos_udf(vecs: pd.Series) -> pd.Series:
@@ -2638,9 +2600,7 @@ def ann_topk_batch(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     probe batch), so it broadcasts — one scan of the embedding table scores
     all queries at once, and the per-query top-k window partitions by q_id
     (parallel across queries, never a global single-task sort)."""
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     scored = (
         emb.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -2682,7 +2642,7 @@ def q_embedding_norm_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-label vector norm statistics (embedding-table profiling)."""
     emb = table(spark, sf, "embeddings")
     return (
-        emb.select("label", F.round(_norm_expr(F.col("embedding")), 4).alias("nrm"))
+        emb.select("label", F.round(l2_norm("embedding"), 4).alias("nrm"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -3100,9 +3060,7 @@ def q_ann_range_search(spark: SparkSession, sf: str) -> DataFrame:
     100 TB path exactly as for top-k."""
     emb = table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -3570,9 +3528,7 @@ def q_ann_sq_topk(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("dqv", dq)
         .withColumn("qd", qd)
     )
-    cos = _dot_expr_pre(F.col("dqv"), F.col("qd")) / (
-        _norm_expr_pre(F.col("dqv")) * _norm_expr_pre(F.col("qd"))
-    )
+    cos = dot("dqv", "qd") / (l2_norm("dqv") * l2_norm("qd"))
     return (
         scored.select("vec_id", F.round(cos, 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")

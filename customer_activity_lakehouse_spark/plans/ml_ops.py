@@ -43,11 +43,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import dot, l2_norm
 from ..operators.joins import dim_join
 from ..session import run_concurrently
 from .core import MONEY, SQL_REV, revenue
 from .registry import Query, materialize, table
-from .vector_kernels import adc_cos, argmin_sq, cents_arrays, int_norm, rows_matrix, sq_dists
+from .vector_kernels import (
+    adc_cos,
+    argmin_sq,
+    cents_arrays,
+    int_norm,
+    rank_cells,
+    rows_matrix,
+)
 
 
 def _ml_tokens(c):
@@ -362,28 +370,11 @@ def _serve_probes(n_cells: int) -> int:
     return max(IVF_PROBES, math.ceil(math.sqrt(max(int(n_cells), 1))))
 
 
-def _ivf_probe_clusters(
-    rows: list[tuple[int, list[float]]], qq: np.ndarray, n_probes: int = IVF_PROBES
-) -> list[int]:
-    """The query's ``n_probes`` nearest cells, ranked ON THE DRIVER over
-    the already-collected centroid rows (r15): K rows × dim doubles of
-    arithmetic — the old in-plan probe (crossJoin the K-row centroid agg,
-    orderBy, limit) re-executed the centroid lineage, a full corpus pass,
-    inside every serve plan. Distances are `vector_kernels.sq_dists` (the
-    JVM fold's op order) and the (dist, cluster) tuple sort is exactly
-    orderBy(cdist, cluster). Pinned against the expression twin in
-    tests/test_np_kernels.py."""
-    cents, clusters = cents_arrays(rows)
-    dists = sq_dists(qq[None, :], cents)[0]
-    scored = sorted(zip(dists.tolist(), clusters.tolist()))
-    return [cl for _, cl in scored[:n_probes]]
-
-
-def _fetch_qq(spark: SparkSession, sf: str) -> np.ndarray | None:
-    """The quantized query vector (vec_id = 0) as a driver array, or None
-    when the corpus has no query row — one pushdown-pruned 1-row job,
-    shared by the probe and the ADC scorer."""
-    embq = _quantize(table(spark, sf, "embeddings"))
+def _fetch_qq(embq: DataFrame) -> np.ndarray | None:
+    """The quantized query vector (vec_id = 0) of the entry's already-read
+    ``embq`` as a driver array, or None when the corpus has no query row —
+    one pushdown-pruned 1-row job, shared by the probe and the ADC
+    scorer."""
     qrow = embq.filter(F.col("vec_id") == 0).select("q").head()
     return None if qrow is None else np.asarray(qrow[0], dtype=np.int64)
 
@@ -393,7 +384,7 @@ def _ivf_probe(
 ) -> DataFrame:
     """IVF candidate ROWS: a final assignment pass (`_km_fit_frame`)
     filtered to the query's IVF_PROBES nearest cells, ranked on the driver
-    from the centroid rows training collected (`_ivf_probe_clusters`) —
+    from the centroid rows training collected (`vector_kernels.rank_cells`) —
     ONE corpus scan with a map-side cluster filter, zero joins, zero
     shuffles (r15; the r14 shape broadcast-joined a probe frame whose
     lineage was a full corpus pass, then joined the candidates back to
@@ -401,7 +392,7 @@ def _ivf_probe(
     included) there are no candidates; ``assigned``'s columns stay."""
     if qq is None:
         return assigned.limit(0)
-    probes = _ivf_probe_clusters(rows, qq)
+    probes = rank_cells(rows, [qq])[0][:IVF_PROBES]
     return assigned.filter(F.col("cluster").isin(probes) & (F.col("vec_id") != 0))
 
 
@@ -422,15 +413,12 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
     serve plan is one corpus scan, zero shuffles (r15 — the r13 shape
     joined the candidate ids back to the corpus by vec_id, a fact-sized
     shuffle join plus a second scan)."""
-    from .llm_ops import _dot_expr, _norm_expr
-
     emb = table(spark, sf, "embeddings")
-    assigned, rows = _km_fit_frame(_quantize(emb), base=_quantize(emb, "embedding"))
-    cand = _ivf_probe(assigned, rows, _fetch_qq(spark, sf))
+    embq = _quantize(emb)
+    assigned, rows = _km_fit_frame(embq, base=_quantize(emb, "embedding"))
+    cand = _ivf_probe(assigned, rows, _fetch_qq(embq))
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     return (
         cand.crossJoin(F.broadcast(qv))
         .select("vec_id", F.round(cos, 4).alias("cos_sim"))
@@ -1029,12 +1017,7 @@ def _capped_cell_pairs(assigned: DataFrame, cell_cap: int, cos_floor: float) -> 
         .drop("rk")
     )
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    v = v.withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
+    v = v.withColumn("nrm", l2_norm("e"))
     a = v.select(
         "cluster",
         F.col("vec_id").alias("vec_a"),
@@ -1049,7 +1032,7 @@ def _capped_cell_pairs(assigned: DataFrame, cell_cap: int, cos_floor: float) -> 
         F.col("nrm").alias("nb"),
         F.col("d4").alias("db"),
     )
-    cos = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = dot("ea", "eb") / (F.col("na") * F.col("nb"))
     return (
         a.join(b, "cluster")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -2853,7 +2836,7 @@ def q_ann_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     driver thread (guide §2.6)."""
     embq = _quantize(table(spark, sf, "embeddings"))
     qq, book = run_concurrently(
-        spark, lambda: _fetch_qq(spark, sf), lambda: _pq_fit(embq)
+        spark, lambda: _fetch_qq(embq), lambda: _pq_fit(embq)
     )
     return _pq_adc_topk(embq.filter(F.col("vec_id") != 0), book, qq)
 
@@ -3015,7 +2998,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
         spark,
         lambda: _km_fit_frame(embq),
         lambda: _pq_fit(embq),
-        lambda: _fetch_qq(spark, sf),
+        lambda: _fetch_qq(embq),
     )
     return _pq_adc_topk(_ivf_probe(assigned, rows, qq).select("vec_id", "q"), book, qq)
 
@@ -3251,15 +3234,7 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     for _ in range(PCA_ITERS):
         proj = embq.crossJoin(F.broadcast(v)).select(
             "q",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(q, v, (a, b) -> a * b),"
-                    " 0.0D, (acc, x) -> acc + x)"
-                )
-                * PCA_CSCALE
-            )
-            .cast("long")
-            .alias("c"),
+            F.round(dot("q", "v") * PCA_CSCALE).cast("long").alias("c"),
         )
         sums = proj.agg(
             *[
@@ -3270,12 +3245,7 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
         w = sums.select(
             F.array(*[F.col(f"s{d}").cast("double") for d in range(KM_DIM)]).alias("w")
         )
-        v = w.select(
-            F.expr(
-                "transform(w, x -> x / sqrt(aggregate(transform(w, y -> y * y),"
-                " 0.0D, (acc, y) -> acc + y)))"
-            ).alias("v")
-        )
+        v = w.select(F.transform("w", lambda x: x / l2_norm("w")).alias("v"))
     return (
         v.select(F.posexplode("v").alias("dim0", "loading"))
         .select(

@@ -9,8 +9,8 @@ with the JVM expression folds and the DuckDB oracles:
   Never ``np.sum`` (pairwise) and never BLAS (``@``/einsum reassociate),
   either of which moves the 4dp-rounded oracle hashes;
 - nearest-centroid choice is the FIRST argmin over the cluster-sorted
-  centroid matrix, which is exactly ``array_min``'s / ``row_number()``'s
-  (dist, cluster) tie order;
+  centroid matrix, and a cell ranking sorts (dist, cluster) tuples — both
+  exactly ``array_min``'s / ``row_number()``'s (dist, cluster) tie order;
 - integer norms (quantized vectors) are exact int64 sums — order-free.
 
 The folds loop over the dimension and update a (rows × cells) accumulator,
@@ -83,6 +83,24 @@ def argmin_sq(x: np.ndarray, cents: np.ndarray) -> tuple[np.ndarray, np.ndarray]
         idx[lo : lo + len(d)] = i
         dist[lo : lo + len(d)] = d[np.arange(len(d)), i]
     return idx, dist
+
+
+def rank_cells(rows, qs) -> list[list[int]]:
+    """Every query's cells, nearest first: for each query vector in ``qs``
+    the cluster ids of the collected (cluster, c) centroid ``rows`` sorted
+    by (:func:`sq_dists`, cluster id) — exactly orderBy(cdist, cluster)
+    over the JVM fold's doubles. The one IVF cell ranking: the probes of
+    the ml_ops IVF entries and of every persisted-index serve, computed on
+    the driver over ≤nlist centroid rows (pinned against the retired
+    expression in tests/test_np_kernels.py)."""
+    if not len(qs):
+        return []
+    cents, clusters = cents_arrays(rows)
+    ids = clusters.tolist()
+    return [
+        [cl for _, cl in sorted(zip(d.tolist(), ids))]
+        for d in sq_dists(np.asarray(qs, dtype=np.float64), cents)
+    ]
 
 
 def int_norm(q: np.ndarray) -> np.ndarray | float:

@@ -50,9 +50,17 @@ def _corpus(spark, lo: int, hi: int):
     )
 
 
-def test_build_then_query_serves_without_training(spark, tmp_path):
-    idx = str(tmp_path / "idx")
-    build_ann_index(spark, _corpus(spark, 0, 300), idx)
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    """One persisted 300-vector index shared by the read-only serve tests
+    (none of them commits to it); tests that maintain, rebuild or fail a
+    build make their own."""
+    path = str(tmp_path_factory.mktemp("ann") / "idx")
+    build_ann_index(spark, _corpus(spark, 0, 300), path)
+    return path
+
+
+def test_build_then_query_serves_without_training(spark, idx):
     cents = read_snapshot(spark, f"{idx}/ivf_centroids")
     books = read_snapshot(spark, f"{idx}/pq_codebooks")
     codes = read_snapshot(spark, f"{idx}/codes")
@@ -155,12 +163,10 @@ def test_maintain_encodes_only_new_vectors_with_frozen_books(spark, tmp_path):
     assert 225 in {r.vec_id for r in got}
 
 
-def test_query_exclude_id_optional_not_hardcoded(spark, tmp_path):
+def test_query_exclude_id_optional_not_hardcoded(spark, idx):
     """Regression (ADVICE r9): the serve API hardcoded `vec_id != 0` (the
     fixture's self-match exclusion). An EXTERNAL query vector must be able
     to get vec_id 0 back; passing exclude_id drops exactly that id."""
-    idx = str(tmp_path / "idx")
-    build_ann_index(spark, _corpus(spark, 0, 300), idx)
     q0 = _quantize(_corpus(spark, 0, 1))  # vector 0 itself as the query
     ids_plain = {r.vec_id for r in query_ann_index(spark, idx, q0, k=5).collect()}
     assert 0 in ids_plain  # self-match comes back when not excluded
@@ -294,7 +300,7 @@ def test_maintain_is_noop_after_corpus_optimize(spark, tmp_path):
     assert read_snapshot(spark, f"{idx}/codes").count() == 220
 
 
-def test_query_where_filters_and_widens_probes(spark, tmp_path):
+def test_query_where_filters_and_widens_probes(spark, idx):
     """query_ann_index_where (VERDICT r9 missing #1): a metadata predicate
     must compose with the serve, and when the first IVF_PROBES cells hold
     fewer than k predicate survivors the serve WIDENS the probed prefix
@@ -305,8 +311,6 @@ def test_query_where_filters_and_widens_probes(spark, tmp_path):
         query_ann_index_where,
     )
 
-    idx = str(tmp_path / "idx")
-    build_ann_index(spark, _corpus(spark, 0, 300), idx)
     q0 = _quantize(_corpus(spark, 0, 1))
     allowed_ids = set(range(200, 260))
     allowed = spark.createDataFrame(
@@ -345,7 +349,7 @@ def test_query_where_filters_and_widens_probes(spark, tmp_path):
     assert victim not in {r.vec_id for r in again}
 
 
-def test_batch_serve_matches_single_query_serve(spark, tmp_path):
+def test_batch_serve_matches_single_query_serve(spark, idx):
     """query_ann_index_batch: one plan serves a whole query batch — each
     query's top-k must be IDENTICAL (ids and 4dp cosines) to the
     single-query serve, the probed-cells read must prune (union of the
@@ -355,8 +359,6 @@ def test_batch_serve_matches_single_query_serve(spark, tmp_path):
         query_ann_index_batch,
     )
 
-    idx = str(tmp_path / "idx")
-    build_ann_index(spark, _corpus(spark, 0, 300), idx)
     qids = [0, 7, 131, 250]
     batch = _quantize(
         spark.createDataFrame([(i,) for i in qids], "id long")
@@ -382,13 +384,13 @@ def test_batch_serve_matches_single_query_serve(spark, tmp_path):
     all_files = set(read_snapshot(spark, f"{idx}/codes").inputFiles())
     probed = {f for f in got.inputFiles() if "/codes/" in f and "-dv-" not in f}
     assert probed and len(probed) <= len(all_files)
-    # plan shape: per-query probe and top-k windows are qid-partitioned
-    # rank limits (WindowGroupLimit), never a global sort of candidates
+    # plan shape: the per-query top-k window is a qid-partitioned rank
+    # limit (WindowGroupLimit), never a global sort of candidates
     phys = got._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in phys, phys
 
 
-def test_batch_where_matches_single_filtered_serve(spark, tmp_path):
+def test_batch_where_matches_single_filtered_serve(spark, idx):
     """query_ann_index_batch_where: per query, identical to the single
     filtered serve (including widening when the first probed cells hold
     fewer than k predicate survivors and the exclude-self adjustment);
@@ -398,8 +400,6 @@ def test_batch_where_matches_single_filtered_serve(spark, tmp_path):
         query_ann_index_where,
     )
 
-    idx = str(tmp_path / "idx")
-    build_ann_index(spark, _corpus(spark, 0, 300), idx)
     # selective predicate -> widening beyond the probe prefix for most
     # queries: ~27 survivors spread over the 18-cell quantizer
     allowed_ids = sorted(range(0, 300, 11))
@@ -589,7 +589,7 @@ def test_sampled_training_deterministic_and_covering(spark):
     assert 1 <= len(c1) <= 12 and 1 <= len(c_full) <= 12
 
 
-def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
+def test_refined_serve_is_exact_over_the_adc_pool(spark, idx):
     """Refine stage (r14 — FAISS IndexRefineFlat): the refined serve's
     top-k must be EXACTLY the brute-force cosine ranking restricted to
     the ADC stage's top-REFINE_POOL candidate ids — same 4dp rounding and
@@ -599,14 +599,9 @@ def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
     from customer_activity_lakehouse_spark.plans.ann_index import (
         query_ann_index_refined,
     )
-    from customer_activity_lakehouse_spark.plans.llm_ops import (
-        _dot_expr,
-        _norm_expr,
-    )
+    from customer_activity_lakehouse_spark.functions.vectors import dot, l2_norm
 
-    idx = str(tmp_path / "idx")
     corpus = _corpus(spark, 0, 300)
-    build_ann_index(spark, corpus, idx)
     q0 = corpus.filter(F.col("vec_id") == 0).select("embedding")
     qq = _quantize(corpus.filter(F.col("vec_id") == 0)).select("q")
     pool = 40
@@ -618,9 +613,7 @@ def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
     assert len(refined) == 5
     assert {int(r.vec_id) for r in refined} <= pool_ids
     # exact ranking over the pool, computed independently
-    cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
-        _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
-    )
+    cos = dot("embedding", "q_emb") / (l2_norm("embedding") * l2_norm("q_emb"))
     exact = (
         corpus.filter(F.col("vec_id").isin(sorted(pool_ids)))
         .crossJoin(F.broadcast(q0.select(F.col("embedding").alias("q_emb"))))
@@ -645,3 +638,78 @@ def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
     adc5 = {int(r.vec_id) for r in query_ann_index(spark, idx, qq, k=5, exclude_id=0).collect()}
     ref5 = {int(r.vec_id) for r in refined}
     assert len(ref5 & bf) >= len(adc5 & bf)
+
+
+def _batch(spark, qids):
+    """(qid, q) quantized query rows: corpus members of the 300-vector
+    fixture as a query batch."""
+    return _quantize(
+        _corpus(spark, 0, 300).filter(F.col("vec_id").isin(qids))
+    ).withColumnRenamed("vec_id", "qid")
+
+
+def test_serve_job_budgets(spark, idx):
+    """Job budgets of the four serves on the shared index, counting the
+    final collect. Cell ranking runs on the driver over the collected
+    centroid rows (`vector_kernels.rank_cells`), so no serve spends a
+    crossJoin/explode/orderBy job ranking cells, and the single serves
+    fetch their query vector once."""
+    from customer_activity_lakehouse_spark.plans.ann_index import (
+        _ordered_cells,
+        query_ann_index_batch,
+        query_ann_index_batch_where,
+        query_ann_index_where,
+    )
+
+    from .test_commit_stats import _jobs_in_group
+
+    q0 = _quantize(_corpus(spark, 0, 1))
+    allowed = spark.createDataFrame([(i,) for i in range(200, 260)], "vec_id long")
+    sparse = spark.createDataFrame([(i,) for i in range(0, 300, 11)], "vec_id long")
+    batch = _batch(spark, [0, 7, 44, 131, 143, 200, 250, 297])
+    calls = {
+        "ordered_cells": (2, lambda: _ordered_cells(spark, idx, q0)),
+        "single": (4, lambda: query_ann_index(spark, idx, q0, k=5).collect()),
+        "where": (
+            8,
+            lambda: query_ann_index_where(spark, idx, q0, allowed, k=10).collect(),
+        ),
+        "batch": (
+            8,
+            lambda: query_ann_index_batch(
+                spark, idx, batch, k=5, exclude_self=True
+            ).collect(),
+        ),
+        "batch_where": (
+            14,
+            lambda: query_ann_index_batch_where(
+                spark, idx, batch, sparse, k=10, exclude_self=True
+            ).collect(),
+        ),
+    }
+    got = {
+        name: _jobs_in_group(spark, f"ann-budget-{name}", fn)
+        for name, (_, fn) in calls.items()
+    }
+    over = {n: g for n, g in got.items() if g > calls[n][0]}
+    assert not over, (over, got)
+
+
+def test_serves_on_empty_query_input(spark, idx):
+    """An empty query input: the single serves refuse it (there is no
+    query to rank cells for), the batch serves return no rows."""
+    from customer_activity_lakehouse_spark.plans.ann_index import (
+        query_ann_index_batch,
+        query_ann_index_batch_where,
+        query_ann_index_where,
+    )
+
+    empty = _quantize(_corpus(spark, 0, 1)).limit(0)
+    allowed = spark.createDataFrame([(1,)], "vec_id long")
+    with pytest.raises(ValueError, match="empty query frame"):
+        query_ann_index(spark, idx, empty)
+    with pytest.raises(ValueError, match="empty query frame"):
+        query_ann_index_where(spark, idx, empty, allowed)
+    none = _batch(spark, [0]).limit(0)
+    assert query_ann_index_batch(spark, idx, none).collect() == []
+    assert query_ann_index_batch_where(spark, idx, none, allowed).collect() == []

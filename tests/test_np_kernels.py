@@ -14,7 +14,10 @@ as the reference twins (production no longer carries them):
 - `_pq_assign` == `_pq_assign_expr` — exact per-(vec, m) codeword;
 - `_adc_code_cos_udf` (both the fixed-query and per-row-query variants)
   == the `_adc_cos` expression over `_pq_cents_by_m` — exact UNROUNDED
-  cosine doubles.
+  cosine doubles;
+- `rank_cells` (the one IVF cell ranking) == the retired crossJoin /
+  explode / orderBy(cdist, cluster) probe expression — exact cell order
+  for every query of a batch.
 """
 
 from __future__ import annotations
@@ -290,17 +293,19 @@ def test_adc_kernel_matches_expression(spark, tmp_path):
 
 
 def test_ivf_probe_driver_ranking_matches_expression(spark):
-    """`_ivf_probe_clusters` (r15 driver-side probe) == the retired in-plan
-    probe: fold the query over the broadcast centroid array with the JVM
-    aggregate expression, orderBy(cdist, cluster), limit — exact doubles,
-    exact (dist, cluster) tie order, for several probe widths."""
-    from customer_activity_lakehouse_spark.plans.ml_ops import _ivf_probe_clusters
+    """`rank_cells` (the driver-side cell ranking of the ml_ops IVF probe
+    and every persisted-index serve) == the retired in-plan probe: fold
+    each query over the broadcast centroid array with the JVM aggregate
+    expression, orderBy(cdist, cluster) — exact doubles, exact (dist,
+    cluster) tie order, for several queries ranked in one call."""
+    from customer_activity_lakehouse_spark.plans.vector_kernels import rank_cells
 
     embq = _quantize(_corpus(spark, 0, 300))
+    qids = [0, 7, 131]
     for k in (8, 17):
         cents = _km_update(_km_assign(embq, _centroid_rows(_seed_cents(embq, k))))
         rows = _centroid_rows(cents)
-        q0 = embq.filter(F.col("vec_id") == 0)
+        qs = embq.filter(F.col("vec_id").isin(qids))
         carr = cents.agg(
             F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
         )
@@ -313,16 +318,20 @@ def test_ivf_probe_driver_ranking_matches_expression(spark):
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-        ranked = (
-            q0.crossJoin(F.broadcast(carr))
-            .select(F.explode("cents").alias("cent"), "q")
-            .select(F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
-            .orderBy("cdist", "cluster")
-        )
-        qq = np.asarray(q0.select("q").head()[0], dtype=np.int64)
-        for n_probes in (1, 2, 5, k):
-            want = [r["cluster"] for r in ranked.limit(n_probes).collect()]
-            assert _ivf_probe_clusters(rows, qq, n_probes) == want
+        want: dict[int, list[int]] = {}
+        for r in (
+            qs.crossJoin(F.broadcast(carr))
+            .select("vec_id", F.explode("cents").alias("cent"), "q")
+            .select("vec_id", F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
+            .orderBy("vec_id", "cdist", "cluster")
+            .collect()
+        ):
+            want.setdefault(r["vec_id"], []).append(r["cluster"])
+        qrows = qs.orderBy("vec_id").select("vec_id", "q").collect()
+        got = rank_cells(rows, [np.asarray(q, dtype=np.int64) for _, q in qrows])
+        assert dict(zip([v for v, _ in qrows], got)) == want
+        assert all(len(cells) == k for cells in got)
+    assert rank_cells(rows, []) == []
 
 
 def test_encode_cells_matches_staged_chain(spark):

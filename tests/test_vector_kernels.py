@@ -1,7 +1,9 @@
 """One vector-kernel module, one concurrency helper.
 
 - structural guard: the sequential-fold kernels exist once
-  (plans/vector_kernels.py) and driver threads are started in one place
+  (plans/vector_kernels.py), the float dot/norm expressions once
+  (functions/vectors.py), plans/ann_index.py ranks cells without a JVM
+  fold, and driver threads are started in one place
   (session.run_concurrently), so copies cannot grow back unnoticed;
 - `run_concurrently` returns results in argument order, propagates a
   thunk's exception, and works when pinned-thread mode is off (pyspark's
@@ -13,6 +15,7 @@
 from __future__ import annotations
 
 import ast
+import re
 import threading
 import time
 from pathlib import Path
@@ -50,6 +53,37 @@ def test_kernels_and_thread_pools_exist_once():
                 thread_sites.append(f"{rel}:{no}")
     assert not cumsum_sites, f"fold copies outside plans/vector_kernels.py: {cumsum_sites}"
     assert not thread_sites, f"thread pools outside session.run_concurrently: {thread_sites}"
+    # cells are ranked by vector_kernels.rank_cells, never by a JVM fold
+    assert "zip_with" not in (PKG / "plans/ann_index.py").read_text()
+    fold_sites = [
+        site for path in sorted(PKG.rglob("*.py")) for site in _float_folds(path)
+    ]
+    outside = [f for f in fold_sites if not f.startswith("functions/vectors.py:")]
+    assert not outside, f"float dot/norm folds outside functions/vectors.py: {outside}"
+    assert len(fold_sites) == 2, fold_sites  # dot and l2_norm: the scan sees them
+
+
+def _float_folds(path: Path) -> list[str]:
+    """Sites of a double ``aggregate`` fold: an ``F.aggregate`` call whose
+    start value is a float ``F.lit``, or a SQL string folding from ``0.0D``.
+    Integer and decimal folds start from other values."""
+    rel = path.relative_to(PKG).as_posix()
+    sites = []
+    for n in ast.walk(ast.parse(path.read_text())):
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "aggregate":
+            start = n.args[1] if len(n.args) > 1 else None
+            if (
+                isinstance(start, ast.Call)
+                and getattr(start.func, "attr", None) == "lit"
+                and start.args
+                and isinstance(start.args[0], ast.Constant)
+                and isinstance(start.args[0].value, float)
+            ):
+                sites.append(f"{rel}:{n.lineno}")
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if re.search(r"aggregate\(.*0\.0D", n.value, re.S):
+                sites.append(f"{rel}:{n.lineno}")
+    return sites
 
 
 def _order_and_error_checks(spark):
